@@ -1,27 +1,23 @@
-"""Partitioned cuckoo URL-seen filter (SURVEY.md §4.2-2, north rule:
-"bloom/cuckoo URL-seen filter").
+"""Partitioned cuckoo URL-seen filter (SURVEY.md §4.2-2).
 
-The deletion-capable sibling of the bloom filter in
-``operators/seenfilter.py``: same per-``url_hash``-bucket partitioning,
-same no-false-negative contract, same cogroup check kernel shape — but
-membership is stored as 16-bit partial-key fingerprints in a 4-way
-cuckoo table (Fan et al., "Cuckoo Filter: Practically Better Than
-Bloom", CoNEXT 2014), so a URL can be *removed*. That is the primitive
-a recrawl/expiry policy needs: re-admitting a stale URL to the
-frontier means deleting it from the seen filter, which a bloom cannot
-do without a rebuild.
+The filter is partitioned per ``url_hash`` bucket: one table row per
+bucket, built and merged distributively, and checked by cogrouping the
+candidates with the table on bucket. Membership is stored as 16-bit
+partial-key fingerprints in a 4-way cuckoo table (Fan et al., "Cuckoo
+Filter", CoNEXT 2014), so a URL can be *removed*. That is the
+primitive a recrawl/expiry policy needs: re-admitting a stale URL to
+the frontier means deleting it from the seen filter.
 
 No-false-negative guarantee (the crawl must never silently drop an
 unseen URL) holds unconditionally: a kick chain that exhausts its
 budget leaves one fingerprint homeless — it parks in the bucket's
 victim stash (the paper's "stash", here unbounded), and the membership
 check consults table OR stash. The stash stays empty below ~0.84 load;
-sizing uses 0.75.
+sizing uses LOAD_FACTOR.
 
 Keys are the engine's Spark-native ``xxhash64(canonical_url)`` int64 —
 fingerprint and both candidate slots derive from it with integer ops
-only (no re-hashing of strings), mirroring seenfilter's double-hash
-derivation.
+only (no re-hashing of strings).
 """
 
 from __future__ import annotations
@@ -35,15 +31,18 @@ CUCKOO_DDL = (
     "bucket int, table binary, stash binary, n_items long, m_slots long"
 )
 
+_COLUMNS = ["bucket", "table", "stash", "n_items", "m_slots"]
+
 SLOTS_PER_BUCKET = 4
+LOAD_FACTOR = 0.75
 _FP_MIX = np.uint64(0x5BD1E995)  # odd mixer: fp -> partner-bucket offset
 _MAX_KICKS = 500
 
 
-def cuckoo_params(expected_n: int, load_factor: float = 0.75) -> int:
+def cuckoo_params(expected_n: int) -> int:
     """Slot-bucket count m (power of two) for an expected item count."""
     expected_n = max(expected_n, 16)
-    need = int(expected_n / (SLOTS_PER_BUCKET * load_factor)) + 1
+    need = int(expected_n / (SLOTS_PER_BUCKET * LOAD_FACTOR)) + 1
     m = 1
     while m < need:
         m <<= 1
@@ -130,39 +129,37 @@ def _contains(
 
 def _delete_many(
     table: np.ndarray, stash: list[int], hashes: np.ndarray, m: int
-) -> int:
+) -> None:
     """Remove ONE fingerprint occurrence per key (standard cuckoo
-    delete: only call for keys previously inserted). Returns the
-    number of removals."""
+    delete: only call for keys previously inserted)."""
     fps = _fingerprints(hashes)
     i1s, i2s = _slot_indexes(hashes, fps, m)
-    removed = 0
     for fp, i1, i2 in zip(fps, i1s, i2s):
         done = False
         for idx in (i1, i2):
             slots = np.flatnonzero(table[idx] == fp)
             if slots.size:
                 table[idx, slots[0]] = 0
-                removed += 1
                 done = True
                 break
         if not done and int(fp) in stash:
             stash.remove(int(fp))
-            removed += 1
-    return removed
 
 
-def _row(bucket: int, table: np.ndarray, stash: list[int], n: int, m: int):
+def _row(bucket: int, table: np.ndarray, stash: list[int]):
+    """One filter-table row. Every insert parks exactly one nonzero
+    fingerprint in the table or the stash and every delete removes one,
+    so the occupied slots plus the stash count the items."""
     return (
         int(bucket),
         table.tobytes(),
         np.asarray(sorted(stash), dtype=np.uint16).tobytes(),
-        int(n),
-        int(m),
+        int(np.count_nonzero(table)) + len(stash),
+        len(table),
     )
 
 
-def _load(row) -> tuple[np.ndarray, list[int], int, int]:
+def _load(row) -> tuple[np.ndarray, list[int], int]:
     m = int(row["m_slots"])
     table = (
         np.frombuffer(bytes(row["table"]), dtype=np.uint16)
@@ -173,99 +170,75 @@ def _load(row) -> tuple[np.ndarray, list[int], int, int]:
     stash = (
         list(np.frombuffer(bytes(st_raw), dtype=np.uint16)) if st_raw else []
     )
-    return table, stash, int(row["n_items"]), m
+    return table, stash, m
 
 
-def build_cuckoos(
-    seen: DataFrame, expected_per_bucket: int, load_factor: float = 0.75
-) -> DataFrame:
+def build_cuckoos(seen: DataFrame, expected_per_bucket: int) -> DataFrame:
     """seen(url_hash, bucket) → one cuckoo row per bucket (distributed,
-    applyInPandas per bucket — the exact shape of build_blooms)."""
-    m = cuckoo_params(expected_per_bucket, load_factor)
+    applyInPandas per bucket)."""
+    m = cuckoo_params(expected_per_bucket)
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         table = np.zeros((m, SLOTS_PER_BUCKET), dtype=np.uint16)
         stash: list[int] = []
-        hashes = pdf["url_hash"].to_numpy(dtype=np.int64)
-        _insert_many(table, stash, hashes, m)
+        _insert_many(table, stash, pdf["url_hash"].to_numpy(dtype=np.int64), m)
         return pd.DataFrame(
-            [_row(pdf["bucket"].iloc[0], table, stash, len(hashes), m)],
-            columns=["bucket", "table", "stash", "n_items", "m_slots"],
+            [_row(pdf["bucket"].iloc[0], table, stash)], columns=_COLUMNS
         )
 
     return seen.groupBy("bucket").applyInPandas(build, schema=CUCKOO_DDL)
 
 
-def merge_cuckoo_delta(
-    cuckoos: DataFrame, delta: DataFrame, expected_per_bucket: int | None = None
-) -> DataFrame:
-    """Fold a (url_hash, bucket) delta into the cuckoo table — the
-    per-wave incremental update, same outer-join + kernel shape as
-    merge_bloom_delta. New buckets size from ``expected_per_bucket``
-    (falls back to the table's first row's shape)."""
-    new_m = (
-        cuckoo_params(expected_per_bucket)
-        if expected_per_bucket is not None
-        else None
-    )
-
+def _fold(cuckoos: DataFrame, keys: DataFrame, how: str, apply, new_m=None):
+    """Apply ``apply(table, stash, hashes, m)`` to each bucket's row with
+    that bucket's keys (url_hash, bucket). ``how`` is the join of the
+    grouped keys to the table: "outer" also creates a fresh ``new_m``
+    table for a bucket only the keys have; "right_outer" keeps exactly
+    the table's buckets."""
     joined = (
-        delta.select("url_hash", "bucket")
+        keys.select("url_hash", "bucket")
         .groupBy("bucket")
         .agg(F.collect_list("url_hash").alias("hashes"))
-        .join(cuckoos, "bucket", "outer")
+        .join(cuckoos, "bucket", how)
     )
 
-    def merge(pdf_iter):
+    def fold(pdf_iter):
         for pdf in pdf_iter:
             out = []
             for row in pdf.to_dict("records"):
                 if row["table"] is not None:
-                    table, stash, n, m = _load(row)
+                    table, stash, m = _load(row)
                 else:
-                    m = new_m if new_m is not None else cuckoo_params(16)
+                    m = new_m
                     table = np.zeros((m, SLOTS_PER_BUCKET), dtype=np.uint16)
-                    stash, n = [], 0
+                    stash = []
                 hashes = row["hashes"]
                 if hashes is not None and len(hashes):
-                    arr = np.asarray(hashes, dtype=np.int64)
-                    _insert_many(table, stash, arr, m)
-                    n += len(arr)
-                out.append(_row(row["bucket"], table, stash, n, m))
-            yield pd.DataFrame(
-                out, columns=["bucket", "table", "stash", "n_items", "m_slots"]
-            )
+                    apply(table, stash, np.asarray(hashes, dtype=np.int64), m)
+                out.append(_row(row["bucket"], table, stash))
+            yield pd.DataFrame(out, columns=_COLUMNS)
 
-    return joined.mapInPandas(merge, schema=CUCKOO_DDL)
+    return joined.mapInPandas(fold, schema=CUCKOO_DDL)
+
+
+def merge_cuckoo_delta(
+    cuckoos: DataFrame, delta: DataFrame, expected_per_bucket: int
+) -> DataFrame:
+    """Fold a (url_hash, bucket) delta into the cuckoo table — the
+    per-wave incremental update. Existing buckets keep their stored
+    size; new buckets size from ``expected_per_bucket``."""
+    return _fold(
+        cuckoos, delta, "outer", _insert_many,
+        cuckoo_params(expected_per_bucket),
+    )
 
 
 def delete_hashes(cuckoos: DataFrame, removals: DataFrame) -> DataFrame:
     """Remove keys (url_hash, bucket) from the filter — the recrawl /
-    seen-expiry primitive a bloom cannot express. Only delete keys that
-    were inserted (cuckoo-filter contract; deleting a never-inserted
-    key may evict an unrelated colliding fingerprint)."""
-    joined = (
-        removals.select("url_hash", "bucket")
-        .groupBy("bucket")
-        .agg(F.collect_list("url_hash").alias("hashes"))
-        .join(cuckoos, "bucket", "right_outer")
-    )
-
-    def drop(pdf_iter):
-        for pdf in pdf_iter:
-            out = []
-            for row in pdf.to_dict("records"):
-                table, stash, n, m = _load(row)
-                hashes = row["hashes"]
-                if hashes is not None and len(hashes):
-                    arr = np.asarray(hashes, dtype=np.int64)
-                    n -= _delete_many(table, stash, arr, m)
-                out.append(_row(row["bucket"], table, stash, n, m))
-            yield pd.DataFrame(
-                out, columns=["bucket", "table", "stash", "n_items", "m_slots"]
-            )
-
-    return joined.mapInPandas(drop, schema=CUCKOO_DDL)
+    seen-expiry primitive. Only delete keys that were inserted
+    (cuckoo-filter contract; deleting a never-inserted key may evict an
+    unrelated colliding fingerprint)."""
+    return _fold(cuckoos, removals, "right_outer", _delete_many)
 
 
 def filter_unseen_cuckoo_join(
@@ -274,9 +247,8 @@ def filter_unseen_cuckoo_join(
     cuckoos: DataFrame,
     n_buckets: int,
 ) -> DataFrame:
-    """Exact unseen set with the cuckoo pre-pass — the drop-in sibling
-    of seenfilter.filter_unseen_join: candidates cogroup with the
-    cuckoo table on bucket, cuckoo-negatives are provably unseen,
+    """Exact unseen set with the cuckoo pre-pass: candidates cogroup
+    with the cuckoo table on bucket, cuckoo-negatives are provably unseen,
     positives anti-join the exact seen set. Result identical to a
     plain anti-join (property-tested)."""
     import pyspark.sql.types as ST
@@ -290,7 +262,7 @@ def filter_unseen_cuckoo_join(
             return cand_pdf.assign(_maybe=pd.Series(dtype=bool))
         if ck_pdf.empty:
             return cand_pdf.assign(_maybe=False)
-        table, stash, _n, m = _load(ck_pdf.iloc[0])
+        table, stash, m = _load(ck_pdf.iloc[0])
         h = cand_pdf["_h"].to_numpy(dtype=np.int64)
         maybe = _contains(
             table, np.asarray(stash, dtype=np.uint16), h, m

@@ -40,6 +40,7 @@ from pyspark.sql import types as T
 
 from go_scrapper_spark.functions.extract import extract_pages
 from go_scrapper_spark.functions.urltools import canonicalize_udf
+from go_scrapper_spark.operators import cuckoofilter as ckf
 from go_scrapper_spark.operators.dedupe import local_checkpoint_no_stats
 from go_scrapper_spark.operators.politeness import apply_robots
 from go_scrapper_spark.operators.wave import host_budget, select_wave
@@ -48,6 +49,8 @@ from go_scrapper_spark.sources.storage import SnapshotStore
 RUN_TS = 1700000000  # single run-level scrape timestamp (P11 determinism)
 
 SEED_SEQ_STRIDE = 10_000_000  # seq space per task; outlink offsets nest inside
+
+SEEN_FILTER_TABLE = "seen_cuckoo"  # snapshot table holding the seen filter
 
 
 @dataclass
@@ -74,22 +77,16 @@ class CrawlConfig:
     # memory — identical semantics (a resume recomputes the uncommitted
     # waves deterministically), K× fewer commit round-trips.
     checkpoint_every: int = 1
-    # partitioned-bloom seen-filter (SURVEY.md §4.2-2): prefilter
-    # candidate URLs through per-bucket blooms so the exact anti-join
-    # touches only bloom-positives. Semantics identical (no false
-    # negatives — tests/test_seenfilter.py); the win appears when the
-    # frontier no longer fits a comfortable anti-join, i.e. at 10^8+.
-    use_bloom: bool = False
-    bloom_expected_per_bucket: int = 100_000
-    bloom_fpp: float = 0.01
-    # which approximate seen-filter backs the pre-pass when use_bloom
-    # is on: "bloom" (operators/seenfilter.py, smallest bytes/key) or
-    # "cuckoo" (operators/cuckoofilter.py, 16-bit fingerprints,
-    # DELETION-capable — expire_urls() can retract keys in place; the
-    # bloom backend must rebuild from the surviving frontier instead).
-    # Both share the cogroup check shape and the no-false-negative
-    # contract, so the fetch log is identical across all three modes.
-    seen_backend: str = "bloom"
+    # partitioned cuckoo seen-filter (SURVEY.md §4.2-2,
+    # operators/cuckoofilter.py): prefilter candidate URLs through
+    # per-bucket cuckoo tables so the exact anti-join touches only
+    # filter-positives. Semantics identical (no false negatives —
+    # tests/test_cuckoofilter.py), and the filter is deletion-capable,
+    # so expire_urls() retracts keys in place. The win appears when
+    # the frontier no longer fits a comfortable anti-join, i.e. at
+    # 10^8+. seen_filter_per_bucket sizes each new bucket's table.
+    use_seen_filter: bool = False
+    seen_filter_per_bucket: int = 100_000
     # cross-request cookie carry (S10 fidelity; reference
     # collyfunc.go:48,99-101,161-163): the reference keeps ONE global
     # []*http.Cookie that every response overwrites with its host's jar
@@ -177,15 +174,15 @@ class CrawlEngine:
         # persisted wave subtrees awaiting the next snapshot commit
         self._pending_mats: list[DataFrame] = []
         self._last_commit_wait: float = 0.0
-        # bloom seen-filter state (use_bloom): the per-bucket bloom
-        # TABLE (bucket, bloom, m_bits, k_hashes) — held as an eagerly
-        # checkpointed DataFrame between waves, merged distributively
-        # (merge_bloom_delta) and committed with each snapshot. Bloom
+        # seen-filter state (use_seen_filter): the per-bucket cuckoo
+        # TABLE (ckf.CUCKOO_DDL) — held as an eagerly checkpointed
+        # DataFrame between waves, merged distributively
+        # (merge_cuckoo_delta) and committed with each snapshot. Filter
         # bytes never touch the driver: the membership check cogroups
         # candidates with this table on bucket.
-        self._bloom_df: DataFrame | None = None
+        self._seen_filter_df: DataFrame | None = None
         # per-host cookie state (cfg.cookies): (host, cookie) table,
-        # O(hosts), eagerly checkpointed per wave like the bloom table
+        # O(hosts), eagerly checkpointed per wave like the seen filter
         # and committed with each snapshot so a resume carries the jar.
         self._cookie_df: DataFrame | None = None
         # G3 incremental-crawl state (main.go:563-654): per-task
@@ -319,71 +316,26 @@ class CrawlEngine:
 
     # --------------------------------------------------------------- superstep
 
-    def _seen_ops(self):
-        """The seen-filter backend behind cfg.seen_backend, as four
-        uniform hooks (build / merge-delta / filter / snapshot table
-        name). Both backends take and return one row per bucket and
-        share the cogroup membership-check shape, so every call site
-        is backend-blind."""
-        cfg = self.cfg
-        if cfg.seen_backend == "cuckoo":
-            from go_scrapper_spark.operators import cuckoofilter as ckf
-
-            return {
-                "build": lambda seen: ckf.build_cuckoos(
-                    seen, cfg.bloom_expected_per_bucket
-                ),
-                "merge": lambda tbl, delta: ckf.merge_cuckoo_delta(
-                    tbl, delta, cfg.bloom_expected_per_bucket
-                ),
-                "filter": ckf.filter_unseen_cuckoo_join,
-                "table": "seen_cuckoo",
-            }
-        if cfg.seen_backend != "bloom":
-            raise ValueError(
-                f"unknown seen_backend {cfg.seen_backend!r}"
-                " (expected 'bloom' or 'cuckoo')"
-            )
-        from go_scrapper_spark.operators import seenfilter as sfilter
-
-        return {
-            "build": lambda seen: sfilter.build_blooms(
-                seen, cfg.bloom_expected_per_bucket, cfg.bloom_fpp
-            ),
-            "merge": lambda tbl, delta: sfilter.merge_bloom_delta(
-                tbl,
-                delta,
-                shape=sfilter.bloom_params(
-                    cfg.bloom_expected_per_bucket, cfg.bloom_fpp
-                ),
-            ),
-            "filter": sfilter.filter_unseen_join,
-            "table": "seen_bloom",
-        }
-
     def _ensure_seen_filter(self, frontier: DataFrame) -> None:
         """Load the committed seen-filter table (resume) or build it
-        from the current frontier (fresh start) — both fully
-        distributed, backend-blind via _seen_ops."""
-        import os
-
+        from the current frontier (fresh start, or a snapshot that
+        carries no filter table) — both fully distributed."""
         cfg = self.cfg
-        ops = self._seen_ops()
         latest = self.store.latest_wave()
         snap_seen = (
-            os.path.join(self.store._snap_dir(latest), ops["table"])
+            os.path.join(self.store._snap_dir(latest), SEEN_FILTER_TABLE)
             if latest is not None
             else None
         )
         if snap_seen and os.path.exists(snap_seen):
-            seen_df = self.store.read_snapshot_table(latest, ops["table"])
+            seen_df = self.store.read_snapshot_table(latest, SEEN_FILTER_TABLE)
         else:
             seen0 = frontier.select(
                 "url_hash",
                 F.pmod("url_hash", F.lit(cfg.n_buckets)).cast("int").alias("bucket"),
             )
-            seen_df = ops["build"](seen0)
-        self._bloom_df = local_checkpoint_no_stats(seen_df)
+            seen_df = ckf.build_cuckoos(seen0, cfg.seen_filter_per_bucket)
+        self._seen_filter_df = local_checkpoint_no_stats(seen_df)
 
     def run_superstep(self, wave_id: int) -> dict:
         """One wave. Returns per-wave metric dict; 'fetched'==0 with
@@ -405,7 +357,7 @@ class CrawlEngine:
             frontier = self.store.read_snapshot_table(
                 self.store.latest_wave(), "frontier"
             )
-        if cfg.use_bloom and self._bloom_df is None:
+        if cfg.use_seen_filter and self._seen_filter_df is None:
             self._ensure_seen_filter(frontier)
 
         if cfg.cookies and self._cookie_df is None:
@@ -584,10 +536,10 @@ class CrawlEngine:
         new_rows = mat(self._new_frontier_rows(union, frontier, wave_id))
         self._pending_mats.append(new_rows)
 
-        if cfg.use_bloom and self._bloom_df is not None:
+        if cfg.use_seen_filter and self._seen_filter_df is not None:
             # fold this wave's delta into the seen-filter table — fully
             # distributed (groupBy bucket + a per-bucket numpy kernel
-            # inside the backend's merge); no url_hash ever reaches the
+            # inside merge_cuckoo_delta); no url_hash ever reaches the
             # driver. The eager localCheckpoint truncates lineage so
             # the table doesn't accrete a per-wave plan chain.
             delta = new_rows.select(
@@ -595,12 +547,14 @@ class CrawlEngine:
                 F.pmod("url_hash", F.lit(cfg.n_buckets)).cast("int").alias("bucket"),
             )
             merged = local_checkpoint_no_stats(
-                self._seen_ops()["merge"](self._bloom_df, delta)
+                ckf.merge_cuckoo_delta(
+                    self._seen_filter_df, delta, cfg.seen_filter_per_bucket
+                )
             )
             # graveyard, not immediate unpersist: an in-flight async
             # commit may still be writing the superseded filter table
-            self._frontier_history.append(self._bloom_df)
-            self._bloom_df = merged
+            self._frontier_history.append(self._seen_filter_df)
+            self._seen_filter_df = merged
 
         if cfg.cookies:
             # per-host jar update: the lexicographically-LAST successful
@@ -608,9 +562,9 @@ class CrawlEngine:
             # wave's within-host issue order) writes the host's next
             # cookie, a deterministic digest of that final URL (the
             # model computes the identical rule). O(hosts) state, eager
-            # checkpoint like the bloom table; the superseded frame goes
-            # to the checkpoint graveyard because this wave's pending
-            # fetch_log plan still reads it.
+            # checkpoint like the seen-filter table; the superseded frame
+            # goes to the checkpoint graveyard because this wave's
+            # pending fetch_log plan still reads it.
             from pyspark.sql import Window
 
             w_last = Window.partitionBy("host").orderBy(
@@ -705,20 +659,11 @@ class CrawlEngine:
         # this window's pending persists recompute through it on
         # eviction, so it lives until the commit's free step.
         _ph("plan")
-        if os.environ.get("CRAWL_PHASE_DEBUG") == "1":
-            # split the ckpt phase: Catalyst analysis+optimization+
-            # physical planning (driver-only) vs the checkpoint job
-            frontier_next._jdf.queryExecution().executedPlan()
-            _ph("qplan")
         new_frontier = local_checkpoint_no_stats(frontier_next)
         if self._frontier_cache is not None:
             self._frontier_history.append(self._frontier_cache)
         self._frontier_cache = new_frontier
         _ph("ckpt")
-        if os.environ.get("CRAWL_PHASE_DEBUG") == "1":
-            _phases["parts"] = new_frontier.rdd.getNumPartitions()
-            _phases["rows"] = new_frontier.count()
-            _ph("dbg")
 
         if cfg.metrics:
             # micro-job over the now-warm caches: crossJoin of the
@@ -798,9 +743,9 @@ class CrawlEngine:
                 self._pending_metrics, "wave_id long, metric string, value long"
             )
             tables.update(self._inc_tables())
-            if cfg.use_bloom and self._bloom_df is not None:
+            if cfg.use_seen_filter and self._seen_filter_df is not None:
                 # filter table rides the snapshot → resume skips rebuild
-                tables[self._seen_ops()["table"]] = self._bloom_df
+                tables[SEEN_FILTER_TABLE] = self._seen_filter_df
             if cfg.cookies and self._cookie_df is not None:
                 # cookie jar rides the snapshot → resume carries state
                 tables["cookies"] = self._cookie_df
@@ -891,18 +836,15 @@ class CrawlEngine:
     #
     #   refresh_urls — re-fetch KNOWN pages in place (state→pending,
     #     attempt→0). Seen-membership is untouched: the page is
-    #     re-fetched but its outlinks still dedup against the filter.
-    #     Works with every seen backend (the filter never learns).
+    #     re-fetched but its outlinks still dedup against the filter
+    #     (the filter never learns).
     #
     #   expire_urls — FORGET pages: rows leave the frontier and their
     #     keys leave the seen filter, so the next time any fetched page
     #     links to them they are re-admitted as fresh discoveries.
     #     This is the op that needs a deletion-capable filter: the
-    #     cuckoo backend retracts the keys in place
-    #     (cuckoofilter.delete_hashes); the bloom backend cannot unset
-    #     bits and rebuilds from the surviving frontier instead (same
-    #     result, full-scan cost — the documented reason seen_backend=
-    #     "cuckoo" exists).
+    #     cuckoo filter retracts the keys in place
+    #     (cuckoofilter.delete_hashes).
 
     def _current_frontier(self) -> DataFrame:
         if self._frontier_cache is not None:
@@ -922,10 +864,11 @@ class CrawlEngine:
         self._join_commit()
         if self._inc_hashes is None:
             self._load_inc_state()
-        if self.cfg.use_bloom and self._bloom_df is None:
+        if self.cfg.use_seen_filter and self._seen_filter_df is None:
             # carry the committed filter into the maintenance snapshot
             # (membership is unchanged on this path — refresh edits
-            # only state/attempt; expire sets _bloom_df itself first)
+            # only state/attempt; expire sets _seen_filter_df itself
+            # first)
             self._ensure_seen_filter(frontier)
         wave = (self.store.latest_wave() or 0) + 1
         frontier = local_checkpoint_no_stats(frontier)
@@ -933,8 +876,8 @@ class CrawlEngine:
             self._frontier_history.append(self._frontier_cache)
         self._frontier_cache = frontier
         tables = {"frontier": frontier, **self._inc_tables()}
-        if self.cfg.use_bloom and self._bloom_df is not None:
-            tables[self._seen_ops()["table"]] = self._bloom_df
+        if self.cfg.use_seen_filter and self._seen_filter_df is not None:
+            tables[SEEN_FILTER_TABLE] = self._seen_filter_df
         if self.cfg.cookies and self._cookie_df is not None:
             tables["cookies"] = self._cookie_df
         self._submit_commit(wave, tables)
@@ -1004,24 +947,12 @@ class CrawlEngine:
             "url_hash",
             "left_anti",
         )
-        if cfg.use_bloom:
-            if self._bloom_df is None:
+        if cfg.use_seen_filter:
+            if self._seen_filter_df is None:
                 self._ensure_seen_filter(frontier)
-            if cfg.seen_backend == "cuckoo":
-                from go_scrapper_spark.operators import cuckoofilter as ckf
-
-                updated = ckf.delete_hashes(self._bloom_df, removals)
-            else:
-                updated = self._seen_ops()["build"](
-                    new_frontier.select(
-                        "url_hash",
-                        F.pmod("url_hash", F.lit(cfg.n_buckets))
-                        .cast("int")
-                        .alias("bucket"),
-                    )
-                )
-            self._frontier_history.append(self._bloom_df)
-            self._bloom_df = local_checkpoint_no_stats(updated)
+            updated = ckf.delete_hashes(self._seen_filter_df, removals)
+            self._frontier_history.append(self._seen_filter_df)
+            self._seen_filter_df = local_checkpoint_no_stats(updated)
         self._maintenance_commit(new_frontier)
         return n
 
@@ -1097,14 +1028,15 @@ class CrawlEngine:
                     F.col("_p") % 2).cast("int").alias("fpo")),
             )
         )
-        # cross-superstep dedup (exact J3): with use_bloom, the
-        # per-bucket bloom pre-pass routes only bloom-positives into the
-        # exact anti-join — same result, scales past anti-join comfort.
-        # The bloom state is a TABLE cogrouped on bucket (no driver
-        # dict, no closure-captured bytes).
-        if cfg.use_bloom and self._bloom_df is not None:
-            cand = self._seen_ops()["filter"](
-                cand, frontier.select("url_hash"), self._bloom_df, cfg.n_buckets
+        # cross-superstep dedup (exact J3): with use_seen_filter, the
+        # per-bucket cuckoo pre-pass routes only filter-positives into
+        # the exact anti-join — same result, scales past anti-join
+        # comfort. The filter state is a TABLE cogrouped on bucket (no
+        # driver dict, no closure-captured bytes).
+        if cfg.use_seen_filter and self._seen_filter_df is not None:
+            cand = ckf.filter_unseen_cuckoo_join(
+                cand, frontier.select("url_hash"), self._seen_filter_df,
+                cfg.n_buckets,
             )
         else:
             # shuffle_hash hint, NOT broadcast: the frontier side is

@@ -13,6 +13,28 @@ import os
 
 from pyspark.sql import SparkSession
 
+_DRIVER_MEM_CAP_MB = 48 * 1024
+
+
+def driver_memory(mem_total_kb: int) -> str:
+    """Default ``spark.driver.memory``: half of the host's MemTotal,
+    capped at 48g. In local mode the driver JVM also runs every
+    executor task, so a fixed 48g heap outgrows a small host and the
+    kernel OOM-kills the JVM mid-run."""
+    return f"{min(mem_total_kb // 2048, _DRIVER_MEM_CAP_MB)}m"
+
+
+def _host_mem_total_kb() -> int:
+    """MemTotal from /proc/meminfo; a host without it gets the cap."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1])
+    except OSError:
+        pass
+    return 2 * 1024 * _DRIVER_MEM_CAP_MB
+
 
 def get_spark(
     app_name: str = "go-scrapper-spark",
@@ -69,7 +91,12 @@ def get_spark(
         # bounds the pathological multi-MB cases.
         .config("spark.sql.maxPlanStringLength",
                 os.environ.get("SPARK_MAX_PLAN_STRING", "262144"))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get(
+                "SPARK_DRIVER_MEM", driver_memory(_host_mem_total_kb())
+            ),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

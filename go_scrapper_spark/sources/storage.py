@@ -34,7 +34,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 
 # delta tables: one slice per snapshot, readers union across snapshots
-# (everything else in a snapshot — frontier, inc_*, seen_bloom — is
+# (everything else in a snapshot — frontier, inc_*, seen_cuckoo — is
 # full state, latest snapshot wins)
 APPEND_TABLES = ("extracted", "fetch_log", "pagetext", "pagemeta", "seen", "metrics")
 

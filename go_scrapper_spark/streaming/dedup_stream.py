@@ -12,7 +12,7 @@ exact dedup).
 State bounds at scale: plain ``dropDuplicates`` keeps every seen hash
 forever — exact, and the right choice when the seen-set lives for the
 run (the crawl engine's own seen filter is the batch analog, with the
-bloom pre-pass for 10^10 keys). For unbounded streams pass ``within``
+cuckoo pre-pass for 10^10 keys). For unbounded streams pass ``within``
 (e.g. "24 hours") to use ``dropDuplicatesWithinWatermark``: state
 expires with the event-time watermark, bounding memory to one window
 of distinct hashes, with the documented relaxation that a duplicate

@@ -145,65 +145,6 @@ def test_checkpoint_interval_preserves_semantics(spark, run):
         shutil.rmtree(base, ignore_errors=True)
 
 
-def test_bloom_seen_filter_preserves_semantics(spark, run):
-    """use_bloom=True (per-bucket bloom pre-pass before the exact
-    anti-join) must yield the identical fetch log and frontier."""
-    _eng, _store, _total, m = run
-    base = tempfile.mkdtemp(prefix="crawl-bloom-")
-    try:
-        store = SnapshotStore(spark, base)
-        pages = sw.generate_pages_df(spark, CFG, n_partitions=4)
-        eng = CrawlEngine(
-            spark, pages, sw.robots_df(spark, CFG), store,
-            CrawlConfig(fail_attempts_fn=lambda u: sw.fail_attempts_for(CFG, u),
-                        use_bloom=True, bloom_expected_per_bucket=64,
-                        checkpoint_every=3),
-        )
-        eng.run(_seeds(spark))
-        assert _engine_log(store) == sorted(m["fetch_log"])
-        ef = {
-            r["url"]: (r["state"], r["attempt"])
-            for r in store.read_snapshot_table(store.latest_wave(), "frontier").collect()
-        }
-        mf = {u: (r["state"], r["attempt"]) for u, r in m["frontier"].items()}
-        assert ef == mf
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_bloom_resume_uses_committed_bloom_table(spark, run):
-    """Kill a use_bloom crawl after wave 2 → a fresh engine must read
-    the committed seen_bloom table (not rebuild from scratch mid-run)
-    and still produce the model's exact fetch log."""
-    import os
-
-    _eng, _store, _total, m = run
-    base = tempfile.mkdtemp(prefix="crawl-bloomresume-")
-    try:
-        store = SnapshotStore(spark, base)
-        pages = sw.generate_pages_df(spark, CFG, n_partitions=4)
-
-        def make_engine():
-            return CrawlEngine(
-                spark, pages, sw.robots_df(spark, CFG), store,
-                CrawlConfig(fail_attempts_fn=lambda u: sw.fail_attempts_for(CFG, u),
-                            use_bloom=True, bloom_expected_per_bucket=64),
-            )
-
-        eng = make_engine()
-        eng.seed(_seeds(spark))
-        eng.run_superstep(1)
-        eng.run_superstep(2)
-        eng.flush_commits()  # the kill happens after the commit lands
-        assert os.path.exists(os.path.join(base, "snap-00002", "seen_bloom"))
-        eng2 = make_engine()  # fresh engine: bloom state from the snapshot
-        eng2.run()
-        assert eng2._bloom_df is not None  # resume actually used the table
-        assert _engine_log(store) == sorted(m["fetch_log"])
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
 def test_compaction_mid_crawl_preserves_resume(spark, run):
     """Compact a mid-crawl store (2 waves committed) into one snapshot,
     resume a FRESH engine from the compacted copy: byte-identical final

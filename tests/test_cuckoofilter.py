@@ -1,7 +1,6 @@
 """Partitioned cuckoo seen-filter: no false negatives ever, exactness
-of the two-phase filter vs a plain anti-join, incremental merge,
-and the one thing the bloom sibling cannot do — deletion (the
-recrawl/seen-expiry primitive)."""
+of the two-phase filter vs a plain anti-join, incremental merge, and
+deletion (the recrawl/seen-expiry primitive)."""
 
 import numpy as np
 import pytest
@@ -37,7 +36,7 @@ def _hits(cuckoos_df, probe_df):
         row = rows.get(r["bucket"])
         if row is None:
             continue
-        table, stash, _n, m = cf._load(row)
+        table, stash, m = cf._load(row)
         if cf._contains(
             table,
             np.asarray(stash, dtype=np.uint16),
@@ -105,10 +104,31 @@ def test_merge_delta_then_no_false_negatives(spark, seen, cuckoos):
     assert len(_hits(merged, delta)) == 500
 
 
+def test_merge_keeps_stored_size_of_existing_buckets(spark, seen):
+    """Resume-with-different-config safety: merging with a different
+    expected_per_bucket must keep each existing bucket at its stored
+    m_slots (no out-of-bounds, no false negatives) while buckets new
+    to the table take the new size."""
+    base = seen.filter(F.col("bucket") < N_BUCKETS // 2)
+    delta = seen.filter(F.col("bucket") >= N_BUCKETS // 2 - 1)
+    old_m, new_m = cf.cuckoo_params(300), cf.cuckoo_params(5000)
+    assert old_m != new_m
+    merged = cf.merge_cuckoo_delta(
+        cf.build_cuckoos(base, expected_per_bucket=300),
+        delta,
+        expected_per_bucket=5000,
+    ).persist()
+    sizes = {int(r["bucket"]): int(r["m_slots"]) for r in merged.collect()}
+    assert sizes == {
+        b: old_m if b < N_BUCKETS // 2 else new_m for b in range(N_BUCKETS)
+    }
+    assert len(_hits(merged, seen)) == 2000
+
+
 def test_delete_reopens_urls_for_recrawl(spark, seen, cuckoos):
     """Deleting keys (recrawl/expiry) must drop them from the filter
     while every remaining key stays positive — the no-false-negative
-    contract survives deletion (the property a bloom cannot offer)."""
+    contract survives deletion."""
     doomed = seen.filter(F.pmod(F.abs(F.col("url_hash")), F.lit(5)) == 0).persist()
     kept = seen.join(doomed.select("url_hash"), "url_hash", "left_anti")
     n_doomed = doomed.count()

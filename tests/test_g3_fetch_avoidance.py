@@ -199,8 +199,8 @@ def test_final_output_contract_vs_full_crawl(spark, runs):
 
 def test_scale_mode_combined_equivalence(spark, runs):
     """All scale features at once — partition_frontier (host_bucket
-    partitioned snapshot writes), use_bloom (bloom-table cogroup
-    seen-filter), checkpoint_every batching — under incremental seeds
+    partitioned snapshot writes), use_seen_filter (cuckoo-table
+    cogroup seen-filter), checkpoint_every batching — under incremental seeds
     must still reproduce the model's exact fetch log."""
     _eng, _store, m_inc, _mf = runs
     base = tempfile.mkdtemp(prefix="crawl-g3scale-")
@@ -211,7 +211,7 @@ def test_scale_mode_combined_equivalence(spark, runs):
             spark, pages, sw.robots_df(spark, CFG), store,
             CrawlConfig(
                 fail_attempts_col=lambda: sw.fail_attempts_col(CFG),
-                use_bloom=True, bloom_expected_per_bucket=64,
+                use_seen_filter=True, seen_filter_per_bucket=64,
                 partition_frontier=True, checkpoint_every=3,
             ),
         )

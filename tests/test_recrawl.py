@@ -1,9 +1,9 @@
-"""Recrawl/expiry maintenance primitives (north rule: "bloom/cuckoo
-URL-seen filter") and the cuckoo seen-filter backend inside the engine.
+"""Recrawl/expiry maintenance primitives and the cuckoo seen filter
+inside the engine.
 
-The cuckoo backend must be fetch-log-identical to the exact anti-join
-and bloom modes (no-false-negative contract is backend-invariant), and
-the two maintenance ops must compose into the incremental-recrawl
+The seen-filter mode must be fetch-log-identical to the exact
+anti-join (the filter has no false negatives), and the two
+maintenance ops must compose into the incremental-recrawl
 story: refresh a hub page -> it re-fetches; expire a leaf -> the next
 page that links to it re-admits it as a fresh discovery, while expired
 pages nobody links to again stay forgotten."""
@@ -15,6 +15,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from go_scrapper_spark.operators import cuckoofilter
 from go_scrapper_spark.plans.crawl import CrawlConfig, CrawlEngine
 from go_scrapper_spark.plans.reference_model import ModelCrawl
 from go_scrapper_spark.plans.search import resolve_profile_keys
@@ -53,34 +54,41 @@ def model():
     return ModelCrawl(CFG).run()
 
 
+def _frontier_urls(store):
+    return {
+        r["url"]: (r["state"], r["attempt"])
+        for r in store.read_snapshot_table(
+            store.latest_wave(), "frontier"
+        ).collect()
+    }
+
+
+def _model_frontier(model):
+    return {u: (r["state"], r["attempt"]) for u, r in model["frontier"].items()}
+
+
 def test_cuckoo_seen_filter_preserves_semantics(spark, model):
-    """seen_backend='cuckoo' must yield the identical fetch log and
-    final frontier (same equivalence the bloom mode passes)."""
+    """use_seen_filter must yield the identical fetch log and final
+    frontier as the model."""
     base = tempfile.mkdtemp(prefix="crawl-cuckoo-")
     try:
         store = SnapshotStore(spark, base)
         eng = _engine(
             spark, store,
-            use_bloom=True, seen_backend="cuckoo",
-            bloom_expected_per_bucket=64, checkpoint_every=3,
+            use_seen_filter=True, seen_filter_per_bucket=64,
+            checkpoint_every=3,
         )
         eng.run(_seeds(spark))
         assert _log(store) == sorted(model["fetch_log"])
-        ef = {
-            r["url"]: (r["state"], r["attempt"])
-            for r in store.read_snapshot_table(
-                store.latest_wave(), "frontier"
-            ).collect()
-        }
-        mf = {u: (r["state"], r["attempt"]) for u, r in model["frontier"].items()}
-        assert ef == mf
+        assert _frontier_urls(store) == _model_frontier(model)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
 
-def test_cuckoo_resume_uses_committed_table(spark, model):
-    """Kill after wave 2 -> the fresh engine must pick up the committed
-    seen_cuckoo snapshot table and still match the model's log."""
+def test_cuckoo_resume_uses_committed_table(spark, model, monkeypatch):
+    """Kill after wave 2 -> the fresh engine must load the committed
+    seen_cuckoo snapshot table, never rebuild it, and still match the
+    model's log."""
     base = tempfile.mkdtemp(prefix="crawl-cuckooresume-")
     try:
         store = SnapshotStore(spark, base)
@@ -88,8 +96,7 @@ def test_cuckoo_resume_uses_committed_table(spark, model):
         def make():
             return _engine(
                 spark, store,
-                use_bloom=True, seen_backend="cuckoo",
-                bloom_expected_per_bucket=64,
+                use_seen_filter=True, seen_filter_per_bucket=64,
             )
 
         eng = make()
@@ -98,6 +105,11 @@ def test_cuckoo_resume_uses_committed_table(spark, model):
         eng.run_superstep(2)
         eng.flush_commits()
         assert os.path.exists(os.path.join(base, "snap-00002", "seen_cuckoo"))
+
+        def no_rebuild(*_a, **_k):
+            raise AssertionError("resume rebuilt the seen filter")
+
+        monkeypatch.setattr(cuckoofilter, "build_cuckoos", no_rebuild)
         eng2 = make()
         eng2.run()
         assert _log(store) == sorted(model["fetch_log"])
@@ -105,27 +117,48 @@ def test_cuckoo_resume_uses_committed_table(spark, model):
         shutil.rmtree(base, ignore_errors=True)
 
 
+def test_filter_rebuilt_over_snapshot_without_filter_table(spark, model):
+    """Turning the filter on over a snapshot that carries no
+    seen_cuckoo table (a run started without the filter, or one that
+    committed a filter table under another name) rebuilds the filter
+    from the frontier and still matches the model."""
+    base = tempfile.mkdtemp(prefix="crawl-cuckoonotable-")
+    try:
+        store = SnapshotStore(spark, base)
+        eng = _engine(spark, store)
+        eng.seed(_seeds(spark))
+        eng.run_superstep(1)
+        eng.run_superstep(2)
+        eng.flush_commits()
+        assert not os.path.exists(
+            os.path.join(base, "snap-00002", "seen_cuckoo")
+        )
+        _engine(
+            spark, store, use_seen_filter=True, seen_filter_per_bucket=64,
+        ).run()
+        assert _log(store) == sorted(model["fetch_log"])
+        assert _frontier_urls(store) == _model_frontier(model)
+        assert os.path.exists(
+            os.path.join(
+                store._snap_dir(store.latest_wave()), "seen_cuckoo"
+            )
+        )
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 @pytest.fixture(scope="module")
 def done(spark):
-    """A completed cuckoo-backed crawl to run maintenance against."""
+    """A completed seen-filter crawl to run maintenance against."""
     base = tempfile.mkdtemp(prefix="crawl-maint-")
     store = SnapshotStore(spark, base)
     eng = _engine(
         spark, store,
-        use_bloom=True, seen_backend="cuckoo", bloom_expected_per_bucket=64,
+        use_seen_filter=True, seen_filter_per_bucket=64,
     )
     eng.run(_seeds(spark))
     yield eng, store
     shutil.rmtree(base, ignore_errors=True)
-
-
-def _frontier_urls(store):
-    return {
-        r["url"]: (r["state"], r["attempt"])
-        for r in store.read_snapshot_table(
-            store.latest_wave(), "frontier"
-        ).collect()
-    }
 
 
 def test_expire_then_relink_readmits_only_linked_urls(spark, done):
@@ -191,33 +224,3 @@ def test_expire_then_relink_readmits_only_linked_urls(spark, done):
     assert f2[linked_seed][0] == "fetched"
     assert orphan not in f2
 
-
-def test_expire_works_on_bloom_backend_via_rebuild(spark, model):
-    """The bloom backend serves expire_urls by rebuilding from the
-    surviving frontier — same semantics, no deletion primitive."""
-    base = tempfile.mkdtemp(prefix="crawl-bloomexp-")
-    try:
-        store = SnapshotStore(spark, base)
-        eng = _engine(
-            spark, store,
-            use_bloom=True, seen_backend="bloom",
-            bloom_expected_per_bucket=64,
-        )
-        eng.run(_seeds(spark))
-        victim = (
-            store.read_appended("fetch_log")
-            .filter((F.col("depth") == 1) & (F.col("status") == 200))
-            .select("url").first()["url"]
-        )
-        assert eng.expire_urls(
-            spark.createDataFrame([(victim,)], "url string")
-        ) == 1
-        assert victim not in _frontier_urls(store)
-        # the rebuilt filter rides the maintenance snapshot
-        assert os.path.exists(
-            os.path.join(
-                store._snap_dir(store.latest_wave()), "seen_bloom"
-            )
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
