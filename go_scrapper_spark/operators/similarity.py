@@ -142,7 +142,9 @@ def cosine_near_dup_pairs(emb: DataFrame, num: int = 3, den: int = 10,
     import numpy as np
     import pandas as pd
 
-    if max_blocks:
+    if max_blocks is not None:
+        if max_blocks < 1:
+            raise ValueError(f"max_blocks must be >= 1 or None, got {max_blocks}")
         n = emb.count()
         if n > block_size * max_blocks:
             block_size = math.ceil(n / max_blocks)

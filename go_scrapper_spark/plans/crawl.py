@@ -33,10 +33,8 @@ import os
 import time
 from dataclasses import dataclass
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from go_scrapper_spark.functions.extract import extract_pages
 from go_scrapper_spark.functions.urltools import canonicalize_udf
@@ -61,9 +59,9 @@ class CrawlConfig:
     n_buckets: int = 64  # host/url hash buckets (skew + storage partitioning)
     max_supersteps: int = 1000
     partition_frontier: bool = False  # partitionBy(host_bucket) on write (scale mode)
-    fail_attempts_fn: object = None  # url -> int; transient-failure injection (Python)
-    # JVM-native failure expression (url column -> int column); preferred
-    # over fail_attempts_fn — keeps the fetch stage out of Python entirely
+    # transient-failure injection: a zero-arg callable returning a
+    # JVM-native Column (url column -> int) of leading attempts that
+    # fail; None means no injected failures
     fail_attempts_col: object = None
     metrics: bool = True
     # small-file control for the parquet-snapshot backend: coalesce each
@@ -105,26 +103,6 @@ class CrawlConfig:
     # ledger, extraction, cookie carry) is identical between the two
     # paths. Factory must be picklable; one client per partition.
     transport_factory: object = None
-    # overlap the snapshot commit with the next wave's planning: the
-    # commit's parquet-encoding jobs run from a background driver
-    # thread (Spark's scheduler is thread-safe) while the main thread
-    # selects and fetches the next wave. Commits stay strictly ordered
-    # (a new commit joins the previous future first) and the manifest
-    # is still written last, so atomicity/resume semantics are
-    # unchanged — a kill mid-overlap leaves the previous committed
-    # snapshot, exactly like a kill mid-commit did before. This was
-    # the last serial disk-bound leg in the N→4N scaling profile.
-    async_commit: bool = True
-
-
-def _fail_udf(fn):
-    @F.pandas_udf(T.IntegerType())
-    def fail_attempts(urls: pd.Series) -> pd.Series:
-        if fn is None:
-            return pd.Series(0, index=urls.index)
-        return urls.map(fn)
-
-    return fail_attempts
 
 
 def _host_col(url_col):
@@ -159,7 +137,6 @@ class CrawlEngine:
         self.robots = robots_df.persist()
         self.store = store
         self.budgets = host_budget(robots_df, self.cfg.window_ms, self.cfg.default_k)
-        self._fail_attempts = _fail_udf(self.cfg.fail_attempts_fn)
         # transient inter-wave state for checkpoint_every > 1
         self._frontier_cache: DataFrame | None = None
         # superseded frontier checkpoints of the current checkpoint
@@ -193,29 +170,14 @@ class CrawlEngine:
         # None = not yet loaded (seed() or a resume populates it).
         self._inc_hashes: dict[int, tuple[str, ...]] | None = None
         self._inc_state: dict[int, dict] = {}
-        # in-flight async commit (cfg.async_commit): at most ONE —
-        # submitting the next commit joins this future first, and
-        # run() joins it before returning, so the store is always
-        # consistent when control leaves the engine
+        # in-flight snapshot commit, overlapped with the next wave's
+        # planning: the commit's parquet-encoding jobs run from a
+        # background driver thread (Spark's scheduler is thread-safe).
+        # At most ONE — submitting the next commit joins this future
+        # first, and run() joins it before returning, so the store is
+        # always consistent when control leaves the engine
         self._commit_future = None
         self._commit_pool = None
-        # wave-invariant Column cache (round 7): every Column/lit call
-        # is a py4j round-trip, and the wave loop used to rebuild
-        # ~4,000 identical expression objects per superstep — profiled
-        # as the bulk of the per-wave "plan" phase (driver-only Python,
-        # 0.5-0.8 s/wave; Catalyst itself is ~0.02 s). Columns are
-        # immutable unresolved expressions, so the static ones are
-        # built once and reused across waves; only genuinely per-wave
-        # values (the wave_id literal) are constructed per superstep.
-        self._col_cache: dict = {}
-
-    def _cc(self, key: str, build):
-        """Build-once cache for wave-invariant Column expressions."""
-        col = self._col_cache.get(key)
-        if col is None:
-            col = build()
-            self._col_cache[key] = col
-        return col
 
     def _join_commit(self) -> None:
         """Wait for the in-flight async commit (if any); re-raises its
@@ -251,9 +213,6 @@ class CrawlEngine:
         # candidate extraction — evaluates twice
         seeds_df = seeds_df.persist()
         self._inc_hashes = {}
-        # the cached probe-window Column derives from the task keys —
-        # drop it so a (re-)seed can never serve a stale schedule
-        self._col_cache.pop("nf_probe_window", None)
         # filter server-side: only incremental tasks reach the driver
         # (a 10^5-task batch with no hashes collects ZERO rows, not all)
         inc_rows = (
@@ -411,15 +370,7 @@ class CrawlEngine:
         # transient failures and its eventual success/exhaustion all
         # happen inside the politeness slot that dequeued it. fa = the
         # number of leading attempts that fail transiently.
-        max_a = self._cc("max_a", lambda: F.lit(cfg.max_attempts))
-        fa_expr = self._cc(
-            "fa_expr",
-            lambda: (
-                cfg.fail_attempts_col()
-                if cfg.fail_attempts_col is not None
-                else self._fail_attempts(F.col("url"))
-            ),
-        )
+        max_a = F.lit(cfg.max_attempts)
         if cfg.transport_factory is not None:
             from go_scrapper_spark.operators.transport import fetch_with_transport
 
@@ -434,23 +385,31 @@ class CrawlEngine:
             # a serial driver build of up to ~10^5 rows per wave.
             fetch_base = wave.join(
                 self.pages.hint("shuffle_hash"), "url", "left"
-            ).withColumn("_fa", fa_expr)
+            ).withColumn(
+                "_fa",
+                cfg.fail_attempts_col()
+                if cfg.fail_attempts_col is not None
+                else F.lit(0),
+            )
         fetched = (
             fetch_base
-            .withColumn("_succ", self._cc("f_succ", lambda: (
+            .withColumn(
+                "_succ",
                 F.col("html").isNotNull()
-                & (F.col("_fa") < max_a - F.col("attempt"))
-            )))
-            .withColumn("_n_attempts", self._cc("f_natt", lambda: (
+                & (F.col("_fa") < max_a - F.col("attempt")),
+            )
+            .withColumn(
+                "_n_attempts",
                 F.when(F.col("_succ"), F.col("_fa") + 1 - F.col("attempt"))
-                .otherwise(max_a - F.col("attempt"))
-            )))
-            .withColumn("status", self._cc("f_status", lambda: (
+                .otherwise(max_a - F.col("attempt")),
+            )
+            .withColumn(
+                "status",
                 F.when(F.col("_succ"), F.lit(200)).otherwise(
                     F.when(F.col("html").isNotNull(), F.lit(503))
                     .otherwise(F.lit(404))
-                )
-            )))
+                ),
+            )
             .persist()
         )
 
@@ -493,30 +452,25 @@ class CrawlEngine:
             log_src.select(
                 F.lit(wave_id).cast("long").alias("wave_id"),
                 "host", "url", "depth", "seq", "html", "_fa", *ck_cols,
-                self._cc("fl_att", lambda: F.explode(
+                F.explode(
                     F.sequence(
                         F.col("attempt"),
                         F.col("attempt") + F.col("_n_attempts") - 1,
                     )
-                ).alias("_att")),
+                ).alias("_att"),
             )
             .select(
                 "wave_id", "host", "url", "depth", "seq",
-                self._cc("fl_attempt", lambda: att_i.alias("attempt")),
-                self._cc("fl_status", lambda: (
-                    F.when(att_i < F.col("_fa"), F.lit(503))
-                    .when(F.col("html").isNotNull(), F.lit(200))
-                    .otherwise(F.lit(404))
-                    .alias("status")
-                )),
-                self._cc("fl_ua",
-                         lambda: ua_col(F.col("url"), att_i).alias("ua")),
-                self._cc("fl_bytes", lambda: (
-                    F.when(
-                        (att_i >= F.col("_fa")) & F.col("html").isNotNull(),
-                        F.length("html"),
-                    ).otherwise(F.lit(0)).cast("long").alias("n_bytes")
-                )),
+                att_i.alias("attempt"),
+                F.when(att_i < F.col("_fa"), F.lit(503))
+                .when(F.col("html").isNotNull(), F.lit(200))
+                .otherwise(F.lit(404))
+                .alias("status"),
+                ua_col(F.col("url"), att_i).alias("ua"),
+                F.when(
+                    (att_i >= F.col("_fa")) & F.col("html").isNotNull(),
+                    F.length("html"),
+                ).otherwise(F.lit(0)).cast("long").alias("n_bytes"),
                 *ck_cols,
             )
         )
@@ -598,23 +552,17 @@ class CrawlEngine:
         # fetched on success, failed after the 5-attempt budget.
         upd = fetched.select(
             "url",
-            self._cc("fm_state", lambda: (
-                F.when(F.col("_succ"), F.lit("fetched"))
-                .otherwise(F.lit("failed"))
-                .alias("_new_state")
-            )),
-            self._cc("fm_attempt", lambda: (
-                F.col("attempt") + F.col("_n_attempts")
-            ).alias("_new_attempt")),
+            F.when(F.col("_succ"), F.lit("fetched"))
+            .otherwise(F.lit("failed"))
+            .alias("_new_state"),
+            (F.col("attempt") + F.col("_n_attempts")).alias("_new_attempt"),
         )
         frontier_next = (
             frontier.join(upd, "url", "left")
             .select(
                 "url", "url_hash", "host", "host_bucket", "depth", "seq", "fpo",
-                self._cc("fm_att2", lambda: F.coalesce(
-                    "_new_attempt", "attempt").alias("attempt")),
-                self._cc("fm_state2", lambda: F.coalesce(
-                    "_new_state", "state").alias("state")),
+                F.coalesce("_new_attempt", "attempt").alias("attempt"),
+                F.coalesce("_new_state", "state").alias("state"),
                 F.when(F.col("_new_state").isNotNull(), F.lit(wave_id).cast("long"))
                 .otherwise(F.col("wave_id"))
                 .alias("wave_id"),
@@ -726,10 +674,7 @@ class CrawlEngine:
         if self._inc_state:
             # G3 window-boundary bookkeeping, BEFORE the commit so the
             # snapshot carries the post-wave scheduler state
-            self._update_inc_state(
-                union,
-                new_frontier if new_frontier is not None else frontier_next,
-            )
+            self._update_inc_state(union, new_frontier)
 
         is_checkpoint = maybe_ckpt or stats["attempted"] == 0
         if is_checkpoint:
@@ -758,11 +703,10 @@ class CrawlEngine:
         return stats
 
     def _submit_commit(self, wave_id: int, tables: dict) -> None:
-        """Commit + cache-release, overlapped with the next wave when
-        cfg.async_commit. The pending state is snapshotted-and-swapped
-        on the MAIN thread first, so the next wave accumulates into
-        fresh lists while the background thread writes and frees only
-        this window's frames. The current frontier checkpoint is NOT
+        """Commit + cache-release, overlapped with the next wave. The
+        pending state is snapshotted-and-swapped on the MAIN thread
+        first, so the next wave accumulates into fresh lists while the
+        background thread writes and frees only this window's frames. The current frontier checkpoint is NOT
         freed — the next wave plans from it (and every table the
         commit writes roots in frames owned by this closure)."""
         from go_scrapper_spark.operators.dedupe import free_local_checkpoint
@@ -787,9 +731,6 @@ class CrawlEngine:
         _t_wait = time.time()
         self._join_commit()
         self._last_commit_wait = round(time.time() - _t_wait, 2)
-        if not self.cfg.async_commit:
-            _commit_and_free()
-            return
         if self._commit_pool is None:
             from concurrent.futures import ThreadPoolExecutor
 
@@ -963,18 +904,14 @@ class CrawlEngine:
     ) -> DataFrame:
         cfg = self.cfg
         cand = (
-            union.filter(self._cc(
-                "nf_outlink", lambda: F.col("kind") == "outlink"))
+            union.filter(F.col("kind") == "outlink")
             .select(
-                self._cc("nf_url", lambda: F.col("out_url").alias("url")),
-                self._cc("nf_depth",
-                         lambda: F.col("out_depth").alias("depth")),
-                self._cc("nf_seq", lambda: F.col("out_seq").alias("seq")),
-                self._cc("nf_fpo", lambda: F.coalesce(
-                    F.col("out_fpo"), F.lit(0)).alias("fpo")),
+                F.col("out_url").alias("url"),
+                F.col("out_depth").alias("depth"),
+                F.col("out_seq").alias("seq"),
+                F.coalesce(F.col("out_fpo"), F.lit(0)).alias("fpo"),
             )
-            .withColumn("host", self._cc(
-                "nf_host", lambda: _host_col(F.col("url"))))
+            .withColumn("host", _host_col(F.col("url")))
         )
         cand = apply_robots(cand, self.robots)
         # in-wave dedup: first discovery wins (min (depth, seq, fpo) per
@@ -991,41 +928,35 @@ class CrawlEngine:
         # the min-ordering (wrong canonical discovery). One codegen'd
         # branch per row; raise_error aborts the wave with the
         # offending values in the message.
-        def _build_min_pack():
-            in_bounds = (
-                (F.col("depth") >= 0) & (F.col("depth") < F.lit(1 << 17))
-                & (F.col("seq") >= 0) & (F.col("seq") < F.lit(1 << 44))
-                & F.col("fpo").isin(0, 1)
-            )
-            pack = F.when(
-                in_bounds,
-                (F.col("depth").cast("long") * F.lit(1 << 45)
-                 + F.col("seq")) * 2
-                + F.col("fpo"),
-            ).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit("frontier pack overflow: depth="),
-                        F.col("depth").cast("string"),
-                        F.lit(" seq="), F.col("seq").cast("string"),
-                        F.lit(" fpo="), F.col("fpo").cast("string"),
-                        F.lit(" (bounds: depth<2^17, seq<2^44, fpo in {0,1})"),
-                    )
-                ).cast("long")
-            )
-            return F.min(pack).alias("_p")
-
+        in_bounds = (
+            (F.col("depth") >= 0) & (F.col("depth") < F.lit(1 << 17))
+            & (F.col("seq") >= 0) & (F.col("seq") < F.lit(1 << 44))
+            & F.col("fpo").isin(0, 1)
+        )
+        pack = F.when(
+            in_bounds,
+            (F.col("depth").cast("long") * F.lit(1 << 45)
+             + F.col("seq")) * 2
+            + F.col("fpo"),
+        ).otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit("frontier pack overflow: depth="),
+                    F.col("depth").cast("string"),
+                    F.lit(" seq="), F.col("seq").cast("string"),
+                    F.lit(" fpo="), F.col("fpo").cast("string"),
+                    F.lit(" (bounds: depth<2^17, seq<2^44, fpo in {0,1})"),
+                )
+            ).cast("long")
+        )
         cand = (
             cand.groupBy("url", "host")
-            .agg(self._cc("nf_min_pack", _build_min_pack))
+            .agg(F.min(pack).alias("_p"))
             .select(
                 "url", "host",
-                self._cc("nf_unpack_depth", lambda: F.expr(
-                    f"(_p div 2) div {1 << 45}").cast("int").alias("depth")),
-                self._cc("nf_unpack_seq", lambda: (
-                    F.expr("_p div 2") % F.lit(1 << 45)).alias("seq")),
-                self._cc("nf_unpack_fpo", lambda: (
-                    F.col("_p") % 2).cast("int").alias("fpo")),
+                F.expr(f"(_p div 2) div {1 << 45}").cast("int").alias("depth"),
+                (F.expr("_p div 2") % F.lit(1 << 45)).alias("seq"),
+                (F.col("_p") % 2).cast("int").alias("fpo"),
             )
         )
         # cross-superstep dedup (exact J3): with use_seen_filter, the
@@ -1052,20 +983,16 @@ class CrawlEngine:
             )
         return cand.select(
             "url",
-            self._cc("nf_url_hash",
-                     lambda: F.xxhash64("url").alias("url_hash")),
+            F.xxhash64("url").alias("url_hash"),
             "host",
-            self._cc("nf_host_bucket", lambda: F.pmod(
-                F.xxhash64("host"), F.lit(cfg.n_buckets)
-            ).cast("int").alias("host_bucket")),
+            F.pmod(F.xxhash64("host"), F.lit(cfg.n_buckets))
+            .cast("int")
+            .alias("host_bucket"),
             "depth", "seq", "fpo",
-            self._cc("nf_attempt", lambda: F.lit(0).alias("attempt")),
-            self._cc("nf_state", lambda: F.lit("pending").alias("state")),
+            F.lit(0).alias("attempt"),
+            F.lit("pending").alias("state"),
             F.lit(wave_id).cast("long").alias("wave_id"),
-            # probe_window depends only on the run's task keys (loaded
-            # once before wave 1), so it is wave-invariant too
-            self._cc("nf_probe_window", lambda:
-                     self._probe_window_col().alias("probe_window")),
+            self._probe_window_col().alias("probe_window"),
         )
 
     # ------------------------------------------------- incremental (G3)
@@ -1123,8 +1050,6 @@ class CrawlEngine:
         """Rebuild incremental state from the latest committed snapshot
         (resume path). No-op into empty state when the run is not
         incremental."""
-        import os
-
         self._inc_hashes, self._inc_state = {}, {}
         latest = self.store.latest_wave()
         if latest is None:
@@ -1215,41 +1140,36 @@ class CrawlEngine:
         encodes non-empty). review_hash was computed pre-b64 in the
         extractor (hash-then-encode order, main.go:985-987)."""
 
-        def _build_static_cols():
-            def b64(col):
-                return F.when(
-                    F.length(col) > 0, F.base64(F.col(col).cast("binary"))
-                ).otherwise(F.col(col))
-
-            return [
-                "url",
-                "parent_id", "review_id", "author_id",
-                b64("author_name").alias("author_name"),
-                b64("text").alias("text"),
-                "rating", "source_date",
-                F.unix_timestamp(
-                    F.to_timestamp("source_date", "M/d/yyyy")
-                ).alias("posted_at"),
-                F.lit(RUN_TS).cast("long").alias("scraped_at"),
-                "not_recommended", "photos",
-                F.transform(
-                    "responses",
-                    lambda r: F.struct(
-                        F.when(F.length(r["author_name"]) > 0,
-                               F.base64(r["author_name"].cast("binary")))
-                        .otherwise(r["author_name"]).alias("author_name"),
-                        F.when(F.length(r["text"]) > 0,
-                               F.base64(r["text"].cast("binary")))
-                        .otherwise(r["text"]).alias("text"),
-                        r["posted_at"].alias("posted_at"),
-                    ),
-                ).alias("responses"),
-                "review_hash",
-                "arrival_idx",
-            ]
+        def b64(col):
+            return F.when(
+                F.length(col) > 0, F.base64(F.col(col).cast("binary"))
+            ).otherwise(F.col(col))
 
         return reviews.select(
-            *self._cc("finish_reviews_cols", _build_static_cols),
+            "url",
+            "parent_id", "review_id", "author_id",
+            b64("author_name").alias("author_name"),
+            b64("text").alias("text"),
+            "rating", "source_date",
+            F.unix_timestamp(
+                F.to_timestamp("source_date", "M/d/yyyy")
+            ).alias("posted_at"),
+            F.lit(RUN_TS).cast("long").alias("scraped_at"),
+            "not_recommended", "photos",
+            F.transform(
+                "responses",
+                lambda r: F.struct(
+                    F.when(F.length(r["author_name"]) > 0,
+                           F.base64(r["author_name"].cast("binary")))
+                    .otherwise(r["author_name"]).alias("author_name"),
+                    F.when(F.length(r["text"]) > 0,
+                           F.base64(r["text"].cast("binary")))
+                    .otherwise(r["text"]).alias("text"),
+                    r["posted_at"].alias("posted_at"),
+                ),
+            ).alias("responses"),
+            "review_hash",
+            "arrival_idx",
             F.lit(wave_id).cast("long").alias("wave_id"),
         )
 

@@ -82,7 +82,6 @@ class SnapshotStore:
         snap = self._snap_dir(wave_id)
         if os.path.exists(snap) and not os.path.exists(self._manifest_path(wave_id)):
             shutil.rmtree(snap)  # orphan from a crashed attempt — idempotent retry
-        counts: dict[str, int] = {}
 
         def write_one(item):
             name, df = item
@@ -111,7 +110,6 @@ class SnapshotStore:
         manifest = {
             "wave_id": wave_id,
             "tables": sorted(tables),
-            "counts": counts,
             "files": files,
         }
         tmp = self._manifest_path(wave_id) + ".tmp"

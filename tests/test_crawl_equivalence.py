@@ -130,7 +130,7 @@ def test_checkpoint_interval_preserves_semantics(spark, run):
         pages = sw.generate_pages_df(spark, CFG, n_partitions=4)
         eng = CrawlEngine(
             spark, pages, sw.robots_df(spark, CFG), store,
-            CrawlConfig(fail_attempts_fn=lambda u: sw.fail_attempts_for(CFG, u),
+            CrawlConfig(fail_attempts_col=lambda: sw.fail_attempts_col(CFG),
                         checkpoint_every=3),
         )
         eng.run(_seeds(spark))
@@ -297,21 +297,20 @@ def test_skewed_corpus_matches_model_and_cap_bounds_hot_host(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
-def test_sync_commit_equals_async_default(spark, run):
-    """cfg.async_commit=False (serial commit, the pre-round-5 layout)
-    must produce the identical fetch log and final frontier as the
-    overlapped default the rest of this suite runs."""
-    _eng, _store, _total, m = run
-    base = tempfile.mkdtemp(prefix="crawl-synccommit-")
+def test_default_fetch_path_matches_model(spark):
+    """CrawlConfig() with no failure injection: the fetch stage's
+    constant-0 failure column must reproduce the model on a web where
+    flaky_mod=10**9 leaves no URL flaky."""
+    cfg = sw.WebConfig(n_biz=8, flaky_mod=10**9)
+    base = tempfile.mkdtemp(prefix="crawl-default-")
     try:
         store = SnapshotStore(spark, base)
-        pages = sw.generate_pages_df(spark, CFG, n_partitions=4)
+        pages = sw.generate_pages_df(spark, cfg, n_partitions=4)
         eng = CrawlEngine(
-            spark, pages, sw.robots_df(spark, CFG), store,
-            CrawlConfig(fail_attempts_col=lambda: sw.fail_attempts_col(CFG),
-                        async_commit=False, checkpoint_every=2),
+            spark, pages, sw.robots_df(spark, cfg), store, CrawlConfig()
         )
-        eng.run(_seeds(spark))
+        eng.run(resolve_profile_keys(sw.seeds_df(spark, cfg), pages))
+        m = ModelCrawl(cfg).run()
         assert _engine_log(store) == sorted(m["fetch_log"])
         ef = {
             r["url"]: (r["state"], r["attempt"])

@@ -35,7 +35,7 @@ def _engine(spark, store, **cfg_kw):
     return CrawlEngine(
         spark, pages, sw.robots_df(spark, CFG), store,
         CrawlConfig(
-            fail_attempts_fn=lambda u: sw.fail_attempts_for(CFG, u), **cfg_kw
+            fail_attempts_col=lambda: sw.fail_attempts_col(CFG), **cfg_kw
         ),
     )
 

@@ -236,6 +236,20 @@ def test_block_all_robots_blocks_everything(spark):
     assert apply_robots(cand, robots).count() == 0
 
 
+def test_null_body_is_permissive(spark):
+    """A NULL robots body (fetch failed, no file) parses to the
+    permissive default: apply_robots admits every URL of that host."""
+    robots = parse_robots_txt(
+        spark.createDataFrame([("h1", None)], "host string, body string")
+    )
+    cand = spark.createDataFrame(
+        [("https://h1/", "h1"), ("https://h1/private/x", "h1")],
+        "url string, host string",
+    )
+    kept = sorted(r["url"] for r in apply_robots(cand, robots).collect())
+    assert kept == ["https://h1/", "https://h1/private/x"]
+
+
 def test_robots_sitemaps_discovery(spark):
     """Sitemap: directives live outside groups, dedupe, honor case-
     insensitive keys, strip comments, and drop relative URLs (the

@@ -153,6 +153,11 @@ def test_cosine_near_dup(emb):
     assert (0, 8) not in pairs  # orthogonal
 
 
+def test_cosine_near_dup_rejects_zero_max_blocks(emb):
+    with pytest.raises(ValueError, match="max_blocks"):
+        similarity.cosine_near_dup_pairs(emb, max_blocks=0)
+
+
 def test_lsh_bucket_neighbors_subset_of_bruteforce(emb):
     lsh = similarity.lsh_bucketed_neighbors(emb, k=3, n_queries=2)
     brute = similarity.topk_dot(emb, k=10, n_queries=2)
