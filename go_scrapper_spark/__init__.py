@@ -17,7 +17,8 @@ Layout
 - ``operators/`` : wave selection, politeness, seen-filter, dedup,
                    similarity, match
 - ``plans/``     : the crawl superstep loop + pure-Python reference model
-- ``streaming/`` : Structured Streaming wrappers (AvailableNow crawl drain)
+- ``streaming/`` : batch sessionization (kept at this path because the
+                   oracle suite imports it from here)
 """
 
 __version__ = "0.1.0"

@@ -25,7 +25,6 @@ from __future__ import annotations
 import html as htmllib
 import json
 import re
-from datetime import datetime, timezone
 from typing import Iterator
 
 import pandas as pd
@@ -47,18 +46,6 @@ _RE_BUSINESS_ID = re.compile(r"\"business_id\":([^],].)+")  # main.go:500
 _RE_NONREC_COUNT = re.compile(r"(\d+)")  # main.go:776
 _RE_RATING = re.compile(r"regular-\s*(\d+)")  # main.go:852
 _RE_AUTHOR_ID = re.compile(r"'userid=(.*)")  # main.go:840
-
-
-def _unix(date_str: str) -> int | None:
-    """Go time.Parse("1/2/2006", s).Unix() (main.go:676)."""
-    try:
-        return int(
-            datetime.strptime(date_str, "%m/%d/%Y")
-            .replace(tzinfo=timezone.utc)
-            .timestamp()
-        )
-    except (ValueError, TypeError):
-        return None
 
 
 def _dom_text(node) -> str:

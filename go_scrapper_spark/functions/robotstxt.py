@@ -99,8 +99,9 @@ def parse_robots_txt(
     round-6 shape paid five (posexplode → host window for group ids →
     star-group distinct → left_semi join → per-host agg → all-hosts
     join). Semantics are unchanged (same RFC 9309 subset, fuzz-tested
-    against the pure-Python model); inputs keep the one-body-per-host
-    contract the engine and oracle already honor.
+    against the pure-Python model). Inputs carry one body per host: a
+    second body yields a second policy row for that host, which
+    ``CrawlEngine.__init__`` rejects with a ``ValueError``.
 
     The group-id prefix scan is an ``aggregate`` fold appending to an
     array accumulator — O(lines²) per host worst-case, irrelevant at

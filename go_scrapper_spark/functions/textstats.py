@@ -99,12 +99,6 @@ LANG_PROFILES: dict[str, tuple[str, ...]] = {
 }
 
 
-def lang_profiles_df(spark) -> DataFrame:
-    """The (lang, word) profile table — tiny, broadcast at use sites."""
-    rows = [(lang, w) for lang, ws in LANG_PROFILES.items() for w in ws]
-    return spark.createDataFrame(rows, "lang string, word string")
-
-
 # punctuation stripped before tokenizing (apostrophe too: French
 # elision "l'homme" → "l homme" so the article surfaces as a token)
 LANG_ID_PUNCT = "[.,!?;:()\"']"

@@ -88,10 +88,6 @@ def resolve_url(base: str, href: str) -> str:
     return urljoin(base, href)
 
 
-def url_host(url: str) -> str:
-    return (urlsplit(url).hostname or "").lower()
-
-
 def reference_profile_fixup(url: str) -> str | None:
     """The reference's yelp-specific URL fixup (main.go:273-291):
     trim trailing newline, force http(s) scheme, force www.yelp.com host
@@ -118,19 +114,3 @@ def reference_profile_fixup(url: str) -> str | None:
 @F.pandas_udf(T.StringType())
 def canonicalize_udf(urls: pd.Series) -> pd.Series:
     return urls.map(canonicalize_url, na_action="ignore")
-
-
-@F.pandas_udf(T.StringType())
-def host_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(url_host, na_action="ignore")
-
-
-def url_hash_col(col):
-    """Seen-filter key: xxhash64 of the canonical URL (north rule) —
-    Spark-native, stays in whole-stage codegen."""
-    return F.xxhash64(col)
-
-
-def host_bucket_col(host_col, n_buckets: int):
-    """Host-hash bucket for partitioning/skew control (SURVEY.md §4.2-1)."""
-    return F.pmod(F.xxhash64(host_col), F.lit(n_buckets)).cast("int")

@@ -44,10 +44,6 @@ def dot_int(a, b) -> F.Column:
     )
 
 
-def norm2_int(a) -> F.Column:
-    return dot_int(a, a)
-
-
 def quantize_int8(emb: DataFrame, id_col: str = "vec_id",
                   vec_col: str = "embedding") -> DataFrame:
     """Per-vector symmetric int8 quantization — the ANN memory-
@@ -248,38 +244,6 @@ def _bucket_array_sql(qv_sql: str, n_planes: int, dim: int,
     return (
         f"transform(sequence(0, {len(tables) - 1}), "
         f"t -> cast({bucket} as int))"
-    )
-
-
-def _bucket_from_quantized(qv_col, n_planes: int = 4, dim: int = 64,
-                           table: int = 0) -> F.Column:
-    """Bucket id from sign bits over an ALREADY-quantized vector
-    column (one table; see ``_bucket_array_sql`` for the plan-build
-    economics). ``qv_col`` is a column name or a Column whose JVM
-    expression renders to SQL (plain column references do)."""
-    qv_sql = qv_col if isinstance(qv_col, str) else qv_col._jc.expr().sql()
-    return F.expr(
-        f"element_at({_bucket_array_sql(qv_sql, n_planes, dim, [table])}, 1)"
-    )
-
-
-def lsh_projection_bucket(vec_col, n_planes: int = 4, dim: int = 64,
-                          table: int = 0) -> F.Column:
-    """Bucket id from sign bits of ``n_planes`` fixed integer-weight
-    hyperplanes over the quantized vector (``table`` seeds an
-    independent plane family per hash table). Deterministic,
-    integer-exact, oracle-reproducible.
-
-    General-purpose wrapper: quantizes inline (the quantize expression
-    is bound once via a one-element transform, not once per plane)."""
-    vec_sql = (vec_col if isinstance(vec_col, str)
-               else vec_col._jc.expr().sql())
-    qv_sql = (f"transform({vec_sql},"
-              " x -> cast(round(cast(x as double) * 1000) as long))")
-    inner = _bucket_array_sql("qv", n_planes, dim, [table])
-    return F.expr(
-        f"element_at(transform(array({qv_sql}), qv -> "
-        f"element_at({inner}, 1)), 1)"
     )
 
 

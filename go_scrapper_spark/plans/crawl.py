@@ -120,6 +120,20 @@ class CrawlEngine:
     ):
         self.spark = spark
         self.cfg = config or CrawlConfig()
+        # the budget and policy joins key on host: a second row for one
+        # host would fan out every wave's fetch log and frontier, so an
+        # outside robots table is rejected before anything is seeded
+        self.robots = robots_df.persist()
+        dup_hosts = sorted(
+            (r["host"] for r in
+             self.robots.groupBy("host").count().filter("count > 1").collect()),
+            key=str,
+        )
+        if dup_hosts:
+            self.robots.unpersist()
+            raise ValueError(
+                f"robots table has more than one row for host(s) {dup_hosts}"
+            )
         # pages are immutable for the whole run: hash-partition them by the
         # join key ONCE and persist — every wave's fetch join then reuses
         # this partitioning and only shuffles the (politeness-capped) wave
@@ -134,7 +148,6 @@ class CrawlEngine:
             if pages_df is not None
             else None
         )
-        self.robots = robots_df.persist()
         self.store = store
         self.budgets = host_budget(robots_df, self.cfg.window_ms, self.cfg.default_k)
         # transient inter-wave state for checkpoint_every > 1
@@ -300,8 +313,7 @@ class CrawlEngine:
         """One wave. Returns per-wave metric dict; 'fetched'==0 with
         'pending'==0 means the crawl is complete. stats['phase_secs']
         carries the wave's driver-side phase breakdown (plan build /
-        checkpoint / metrics / commit) — the skew-tail audit's
-        instrument."""
+        checkpoint / metrics / commit)."""
         cfg = self.cfg
         _phases: dict = {}
         _pt = [time.time()]

@@ -124,10 +124,6 @@ def nonrec_page_url(cfg: WebConfig, biz: int, start: int) -> str:
     return f"{nonrec_root_url(cfg, biz)}?not_recommended_start={start}"
 
 
-def dead_url(cfg: WebConfig, biz: int) -> str:
-    return f"https://{host_of_biz(cfg, biz)}/missing/{biz}"
-
-
 SEARCH_HOST = "www.search.example"
 
 

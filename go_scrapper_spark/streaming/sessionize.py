@@ -1,54 +1,23 @@
-"""Sessionization — custom stateful streaming operator (SURVEY.md §8).
+"""Sessionization: group events per user into sessions split by an
+inactivity gap.
 
 The reference has no event stream, so this is part of the engine's
-training-data/analytics tier: group events per user into sessions
-split by an inactivity gap.
+training-data/analytics tier. ``sessionize_batch`` is classic
+gaps-and-islands over window functions (lag → gap flag → running sum
+= session id → aggregate): native SQL, whole-stage codegen, one
+shuffle on user_id. ``sql_sessionize`` is its DuckDB oracle twin; the
+two agree bit-exact (money in integer cents, timestamps in epoch
+millis).
 
-Two implementations with identical semantics:
-
-- ``sessionize_batch``: classic gaps-and-islands over window functions
-  (lag → gap flag → running sum = session id → aggregate). Pure native
-  SQL, whole-stage codegen, one shuffle on user_id; the DuckDB oracle
-  twin verifies it bit-exact (money in integer cents, timestamps in
-  epoch millis).
-- ``sessionize_stream``: Structured Streaming with
-  ``applyInPandasWithState`` (Arrow-batched per-user state). Within a
-  micro-batch the same gap split runs in pandas; the trailing (still
-  open) session is kept in GroupState with an event-time timeout of
-  ``last_event + gap``, so it flushes once the watermark passes it.
-  Under an AvailableNow drain the final open session per user remains
-  in state — the test asserts stream output == batch sessions minus
-  each user's last (the deterministic contract of a drained stream).
-
-Scale notes: state is O(active users), partitioned by the groupBy key;
-the batch variant's single window shuffle is the same partitioning.
-
-Out-of-order caveat (standard for aggregate-only session state): a
-late event arriving in a later micro-batch extends the open session's
-[start, end] bounds (never shrinks them), but it cannot re-merge two
-sessions that an earlier batch already split — events later than the
-watermark delay should be dropped upstream or handled by a batch
-backfill with ``sessionize_batch``.
+Batch only. The module keeps the ``streaming/`` path because the
+frozen oracle suite (``oracle_queries.sessionize_events``) imports
+both functions from here.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-EVENTS_DDL = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
-)
-
-SESSION_OUT_DDL = (
-    "user_id long, session_start_ms long, session_end_ms long, "
-    "n_events long, sum_value_cents long"
-)
-_STATE_DDL = "start_ms long, end_ms long, n long, cents long"
 
 
 def sessionize_batch(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
@@ -108,94 +77,3 @@ SELECT user_id,
        CAST(sum(cents) AS BIGINT) AS sum_value_cents
 FROM s GROUP BY user_id, sid
 """
-
-
-def _sessionize_fn(gap_ms: int):
-    def fn(
-        key: Tuple[Any, ...], pdf_iter: Iterator[pd.DataFrame], state
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            start_ms, end_ms, n, cents = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [(user_id, start_ms, end_ms, n, cents)],
-                columns=["user_id", "session_start_ms", "session_end_ms",
-                         "n_events", "sum_value_cents"],
-            )
-            return
-        import numpy as np
-
-        rows = pd.concat(list(pdf_iter), ignore_index=True)
-        rows = rows.sort_values(["ts", "event_id"])
-        ts_ms = (rows["ts"].astype("int64") // 1_000_000).to_numpy()
-        # HALF_UP away from zero, matching Spark F.round / DuckDB round
-        # (pandas .round() is banker's half-to-even — 12.5 would give 12)
-        v = rows["value"].to_numpy() * 100.0
-        cents = (np.sign(v) * np.floor(np.abs(v) + 0.5)).astype("int64")
-        # seed with the carried-over open session, if any
-        if state.exists:
-            start_ms, end_ms, n, total = state.get
-        else:
-            start_ms, end_ms, n, total = None, None, 0, 0
-        out = []
-        for t, c in zip(ts_ms.tolist(), cents.tolist()):
-            if start_ms is None:
-                start_ms, end_ms, n, total = t, t, 1, c
-            elif t - end_ms > gap_ms:
-                out.append((user_id, start_ms, end_ms, n, total))
-                start_ms, end_ms, n, total = t, t, 1, c
-            else:
-                # a cross-batch out-of-order event (above the watermark)
-                # may predate the open session's end — extend, never
-                # shrink, the session bounds
-                start_ms = min(start_ms, t)
-                end_ms, n, total = max(end_ms, t), n + 1, total + c
-        # keep the trailing open session; flush it when the watermark
-        # passes last_event + gap
-        state.update((start_ms, end_ms, n, total))
-        state.setTimeoutTimestamp(end_ms + gap_ms)
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=["user_id", "session_start_ms", "session_end_ms",
-                         "n_events", "sum_value_cents"],
-            )
-
-    return fn
-
-
-def sessionize_stream(
-    spark: SparkSession,
-    events_dir: str,
-    checkpoint_dir: str,
-    out_table: str,
-    gap_minutes: int = 30,
-    watermark: str = "1 hour",
-) -> None:
-    """Drain ``events_dir`` with AvailableNow; emit closed sessions to
-    an in-memory sink table."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    gap_ms = gap_minutes * 60 * 1000
-    stream = spark.readStream.schema(EVENTS_DDL).parquet(events_dir)
-    sessions = (
-        stream.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize_fn(gap_ms),
-            outputStructType=SESSION_OUT_DDL,
-            stateStructType=_STATE_DDL,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(out_table)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -320,3 +320,18 @@ def test_default_fetch_path_matches_model(spark):
         assert ef == mf
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+def test_duplicate_robots_rows_rejected_before_seed(spark, tmp_path):
+    """A robots table from outside the program with two rows for one
+    host would fan out the budget and policy joins (every fetch logged
+    twice); the engine refuses it, naming the host, before it seeds or
+    commits anything."""
+    robots = sw.robots_df(spark, CFG)
+    twice = robots.unionByName(
+        robots.filter(F.col("host") == "www.host0.example"))
+    store = SnapshotStore(spark, str(tmp_path))
+    pages = sw.generate_pages_df(spark, CFG, n_partitions=4)
+    with pytest.raises(ValueError, match=r"www\.host0\.example"):
+        CrawlEngine(spark, pages, twice, store, CrawlConfig())
+    assert store.latest_wave() is None

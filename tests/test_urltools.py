@@ -7,7 +7,6 @@ from go_scrapper_spark.functions.urltools import (
     canonicalize_url,
     reference_profile_fixup,
     resolve_url,
-    url_host,
 )
 
 
@@ -71,10 +70,6 @@ def test_resolve_relative():
         resolve_url("https://h.example/biz/key", "/not_recommended_reviews/b1")
         == "https://h.example/not_recommended_reviews/b1"
     )
-
-
-def test_host():
-    assert url_host("https://WWW.A.com/x") == "www.a.com"
 
 
 def test_reference_fixup_scheme_host():

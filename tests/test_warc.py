@@ -239,48 +239,6 @@ def test_cdx_index_shape(spark):
     assert b["digest"] == hashlib.md5(b"").hexdigest()
 
 
-def test_streaming_warc_ingest_equals_batch_and_is_incremental(spark, tmp_path):
-    """Stream == batch through the same parse kernel, and the file-
-    source checkpoint makes ingestion incremental: a second drain
-    after new archives land parses only the new files (no re-emission
-    of the old pages)."""
-    from go_scrapper_spark.streaming.warc_stream import warc_ingest_stream
-
-    def mk_pages(lo, hi):
-        return spark.createDataFrame(
-            [(f"https://s{i % 3}.example.com/p/{i}", "2024-07-01T00:00:00",
-              bytearray(f"<html>page {i}</html>".encode()))
-             for i in range(lo, hi)],
-            "url string, ts string, html binary",
-        ).select("url", F.to_timestamp("ts").alias("warc_ts"), "html")
-
-    files_dir = str(tmp_path / "warcs")
-    ck = str(tmp_path / "ck")
-    out = str(tmp_path / "pages")
-
-    w.pages_to_warc(mk_pages(0, 30), n_files=3).write.mode(
-        "append").parquet(files_dir)
-    warc_ingest_stream(spark, files_dir, ck, out, max_files_per_trigger=1)
-
-    def snap(path):
-        return {r["url"]: bytes(r["html"])
-                for r in spark.read.parquet(path).collect()}
-
-    got = snap(out)
-    want = {r["url"]: bytes(r["html"])
-            for r in w.warc_to_pages(
-                spark.read.parquet(files_dir)).collect()}
-    assert got == want and len(got) == 30
-
-    # second wave of archives: only the new pages appear, exactly once
-    w.pages_to_warc(mk_pages(30, 45), n_files=2).write.mode(
-        "append").parquet(files_dir)
-    warc_ingest_stream(spark, files_dir, ck, out, max_files_per_trigger=1)
-    got2 = spark.read.parquet(out)
-    assert got2.count() == 45  # 30 old + 15 new, no duplicates
-    assert got2.select("url").distinct().count() == 45
-
-
 def test_archive_sinks_degrade_on_malformed_rows(spark):
     """A null url (unarchivable) drops; a null warc_ts stamps the
     epoch — one bad row must never abort a 100 TB export."""
