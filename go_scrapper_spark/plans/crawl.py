@@ -14,9 +14,10 @@ Each superstep (wave) is one declarative Spark plan:
       → snapshot commit (atomic; resume-idempotent via wave_id stamps)
 
 The loop itself is plain driver Python — deterministic and resumable
-from the last committed snapshot. Each superstep reads its frontier
-from the previous snapshot's parquet, which also truncates lineage (no
-iterative-plan blowup).
+from the last committed snapshot. Each wave's frontier is an eager
+local checkpoint kept in memory for the next wave (lineage truncated,
+no iterative-plan blowup); every snapshot also holds it, with the rest
+of the full state, for a fresh engine to load.
 
 Scale design (10^10 frontier): frontier/seen bucketed by host/url hash
 (Iceberg ``bucket()``), wave selection windows align with that
@@ -29,9 +30,9 @@ identical semantics.
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,11 +59,12 @@ class CrawlConfig:
     default_k: int = 10  # colly Parallelism fallback (collyfunc.go:179)
     n_buckets: int = 64  # host/url hash buckets (skew + storage partitioning)
     max_supersteps: int = 1000
-    partition_frontier: bool = False  # partitionBy(host_bucket) on write (scale mode)
     # transient-failure injection: a zero-arg callable returning a
     # JVM-native Column (url column -> int) of leading attempts that
     # fail; None means no injected failures
     fail_attempts_col: object = None
+    # accepted and ignored: every wave counts through the one aggregate
+    # action in run_superstep (callers that still pass it keep working)
     metrics: bool = True
     # small-file control for the parquet-snapshot backend: coalesce each
     # delta table to this many files before write. At cluster scale this
@@ -150,39 +152,42 @@ class CrawlEngine:
         )
         self.store = store
         self.budgets = host_budget(robots_df, self.cfg.window_ms, self.cfg.default_k)
-        # transient inter-wave state for checkpoint_every > 1
+        # Carried full state: every snapshot commits it (_carried_tables)
+        # and a fresh engine loads it once (_load_state); seed() fills
+        # it on a fresh run. False until one of the two has run.
+        self._state_loaded = False
+        # the live frontier: an eager checkpoint kept in memory between
+        # waves (the parquet read of the latest snapshot right after a
+        # resume)
         self._frontier_cache: DataFrame | None = None
-        # superseded frontier checkpoints of the current checkpoint
-        # window: the window's lazily-persisted wave subtrees root their
-        # lineage at these frames, so they must stay alive (spillable
-        # MEMORY_AND_DISK blocks) until the post-commit free step — freeing them
-        # eagerly would truncate the recompute path of any evicted
-        # persist block
-        self._frontier_history: list[DataFrame] = []
+        # seen-filter state (use_seen_filter): the per-bucket cuckoo
+        # TABLE (ckf.CUCKOO_DDL) — held as an eagerly checkpointed
+        # DataFrame between waves and merged distributively
+        # (merge_cuckoo_delta). Filter bytes never touch the driver:
+        # the membership check cogroups candidates with it on bucket.
+        self._seen_filter_df: DataFrame | None = None
+        # per-host cookie state (cfg.cookies): (host, cookie) table,
+        # O(hosts), eagerly checkpointed per wave like the seen filter.
+        self._cookie_df: DataFrame | None = None
+        # G3 incremental-crawl state (main.go:563-654): per-task
+        # last_review_hashes and probe-window scheduler state. Both are
+        # O(task list) — the same driver-side scale as the reference's
+        # CLI payload — so a resumed run continues the probe schedule
+        # deterministically.
+        self._inc_hashes: dict[int, tuple[str, ...]] = {}
+        self._inc_state: dict[int, dict] = {}
+        # superseded checkpoints of the current checkpoint window (see
+        # _supersede): the window's lazily-persisted wave subtrees root
+        # their lineage at these frames, so they stay alive (spillable
+        # MEMORY_AND_DISK blocks) until the post-commit free step —
+        # freeing them eagerly would truncate the recompute path of any
+        # evicted persist block
+        self._superseded: list[DataFrame] = []
         self._pending_deltas: dict[str, list[DataFrame]] = {}
         self._pending_metrics: list[tuple] = []
         # persisted wave subtrees awaiting the next snapshot commit
         self._pending_mats: list[DataFrame] = []
         self._last_commit_wait: float = 0.0
-        # seen-filter state (use_seen_filter): the per-bucket cuckoo
-        # TABLE (ckf.CUCKOO_DDL) — held as an eagerly checkpointed
-        # DataFrame between waves, merged distributively
-        # (merge_cuckoo_delta) and committed with each snapshot. Filter
-        # bytes never touch the driver: the membership check cogroups
-        # candidates with this table on bucket.
-        self._seen_filter_df: DataFrame | None = None
-        # per-host cookie state (cfg.cookies): (host, cookie) table,
-        # O(hosts), eagerly checkpointed per wave like the seen filter
-        # and committed with each snapshot so a resume carries the jar.
-        self._cookie_df: DataFrame | None = None
-        # G3 incremental-crawl state (main.go:563-654): per-task
-        # last_review_hashes and probe-window scheduler state. Both are
-        # O(task list) — the same driver-side scale as the reference's
-        # CLI payload — and are committed with every snapshot so a
-        # resumed run continues the probe schedule deterministically.
-        # None = not yet loaded (seed() or a resume populates it).
-        self._inc_hashes: dict[int, tuple[str, ...]] | None = None
-        self._inc_state: dict[int, dict] = {}
         # in-flight snapshot commit, overlapped with the next wave's
         # planning: the commit's parquet-encoding jobs run from a
         # background driver thread (Spark's scheduler is thread-safe).
@@ -225,24 +230,17 @@ class CrawlEngine:
         # search-resolved seeds that is the search fetch join plus the
         # candidate extraction — evaluates twice
         seeds_df = seeds_df.persist()
-        self._inc_hashes = {}
         # filter server-side: only incremental tasks reach the driver
         # (a 10^5-task batch with no hashes collects ZERO rows, not all)
-        inc_rows = (
-            seeds_df.select("seq", "last_review_hashes")
+        inc_hashes = {
+            int(r["seq"]): tuple(r["last_review_hashes"])
+            for r in seeds_df.select("seq", "last_review_hashes")
             .filter(
                 F.size(F.coalesce(F.col("last_review_hashes"), F.array())) > 0
             )
             .collect()
-        )
-        for r in inc_rows:
-            self._inc_hashes[int(r["seq"])] = tuple(r["last_review_hashes"])
-        self._inc_state = {
-            tk: {"unlocked": 0, "done": False, "started": False,
-                 "hit": False, "n_reviews": 0}
-            for tk in self._inc_hashes
         }
-        inc_keys = list(self._inc_hashes)
+        inc_keys = list(inc_hashes)
         fpo_col = F.coalesce(F.col("first_page_only"), F.lit(0))
         if inc_keys:
             fpo_col = F.when(F.col("seq").cast("long").isin(inc_keys), F.lit(0)).otherwise(fpo_col)
@@ -276,42 +274,113 @@ class CrawlEngine:
         # seed commit instead of waiting on it, and never re-reads the
         # snapshot it is derived from. (run() / flush_commits() joins
         # before anything reads the store.)
-        frontier = local_checkpoint_no_stats(frontier)
-        self._frontier_cache = frontier
-        seen = frontier.select(
-            "url_hash",
-            F.pmod(F.col("url_hash"), F.lit(self.cfg.n_buckets)).cast("int").alias("bucket"),
-            F.lit(0).cast("long").alias("wave_id"),
+        self._fill_state(local_checkpoint_no_stats(frontier), lambda _name: None)
+        self._inc_hashes = inc_hashes
+        self._inc_state = {
+            tk: {"unlocked": 0, "done": False, "started": False,
+                 "hit": False, "n_reviews": 0}
+            for tk in inc_hashes
+        }
+        seen = self._frontier_cache.select(
+            "url_hash", self._url_bucket(), F.lit(0).cast("long").alias("wave_id"),
         )
-        self._submit_commit(0, {"frontier": frontier, "seen": seen, **self._inc_tables()})
+        self._submit_commit(0, {**self._carried_tables(), "seen": seen})
         seeds_df.unpersist()
+
+    # ------------------------------------------------------- carried state
+    #
+    # The full state a fresh engine needs to resume: the frontier, the
+    # seen filter (use_seen_filter), the cookie jar (cookies) and the
+    # incremental tables (a run with incremental tasks). Every snapshot
+    # commits all of it; a fresh engine loads it once.
+
+    def _load_state(self) -> None:
+        """Fill the carried state from the latest committed snapshot,
+        once per engine (seed() fills it itself on a fresh run)."""
+        if self._state_loaded:
+            return
+        frontier = self.store.read_latest("frontier")
+        if frontier is None:
+            raise ValueError("no committed snapshot: seed the crawl first")
+        self._fill_state(frontier, self.store.read_latest)
+
+    def _fill_state(self, frontier: DataFrame, read) -> None:
+        """Set the live frontier and every carried table from
+        ``read(name)`` — a frame, or None when the snapshot lacks it.
+        A missing table takes its fresh-start value: the seen filter is
+        built from the frontier, the cookie jar and the incremental
+        state start empty."""
+        cfg = self.cfg
+        self._state_loaded = True
+        self._frontier_cache = frontier
+        if cfg.use_seen_filter:
+            seen = read(SEEN_FILTER_TABLE)
+            if seen is None:
+                seen = ckf.build_cuckoos(
+                    frontier.select("url_hash", self._url_bucket()),
+                    cfg.seen_filter_per_bucket,
+                )
+            self._seen_filter_df = local_checkpoint_no_stats(seen)
+        if cfg.cookies:
+            jar = read("cookies")
+            if jar is None:
+                jar = self.spark.createDataFrame([], "host string, cookie string")
+            self._cookie_df = local_checkpoint_no_stats(jar)
+        self._inc_hashes, self._inc_state = {}, {}
+        hashes = read("inc_hashes")
+        if hashes is None:
+            return
+        for r in hashes.collect():
+            self._inc_hashes.setdefault(int(r["task_key"]), []).append(r["review_hash"])
+        self._inc_hashes = {k: tuple(v) for k, v in self._inc_hashes.items()}
+        for r in read("inc_state").collect():
+            self._inc_state[int(r["task_key"])] = {
+                "unlocked": int(r["unlocked"]), "done": bool(r["done"]),
+                "started": bool(r["started"]), "hit": bool(r["hit"]),
+                "n_reviews": int(r["n_reviews"]),
+            }
+
+    def _carried_tables(self) -> dict:
+        """The full-state tables every snapshot commits."""
+        tables = {"frontier": self._frontier_cache}
+        if self.cfg.use_seen_filter:
+            tables[SEEN_FILTER_TABLE] = self._seen_filter_df
+        if self.cfg.cookies:
+            tables["cookies"] = self._cookie_df
+        if self._inc_hashes:
+            from go_scrapper_spark.schemas import INC_HASHES_SCHEMA, INC_STATE_SCHEMA
+
+            tables["inc_hashes"] = self.spark.createDataFrame(
+                [(tk, h) for tk, hs in self._inc_hashes.items() for h in hs],
+                INC_HASHES_SCHEMA,
+            )
+            tables["inc_state"] = self.spark.createDataFrame(
+                [(tk, st["unlocked"], st["done"], st["started"], st["hit"],
+                  st["n_reviews"])
+                 for tk, st in self._inc_state.items()],
+                INC_STATE_SCHEMA,
+            )
+        return tables
+
+    def _supersede(self, old: DataFrame, new: DataFrame) -> DataFrame:
+        """Eager checkpoint of ``new``, the replacement of the live
+        frame ``old``. ``old`` is not freed here: this window's pending
+        persists recompute through it on eviction and an in-flight
+        commit may still be writing it, so it waits for the next
+        commit's free step."""
+        self._superseded.append(old)
+        return local_checkpoint_no_stats(new)
+
+    def _url_bucket(self):
+        """The seen-filter bucket of a row's url_hash."""
+        return F.pmod("url_hash", F.lit(self.cfg.n_buckets)).cast("int").alias("bucket")
 
     # --------------------------------------------------------------- superstep
 
-    def _ensure_seen_filter(self, frontier: DataFrame) -> None:
-        """Load the committed seen-filter table (resume) or build it
-        from the current frontier (fresh start, or a snapshot that
-        carries no filter table) — both fully distributed."""
-        cfg = self.cfg
-        latest = self.store.latest_wave()
-        snap_seen = (
-            os.path.join(self.store._snap_dir(latest), SEEN_FILTER_TABLE)
-            if latest is not None
-            else None
-        )
-        if snap_seen and os.path.exists(snap_seen):
-            seen_df = self.store.read_snapshot_table(latest, SEEN_FILTER_TABLE)
-        else:
-            seen0 = frontier.select(
-                "url_hash",
-                F.pmod("url_hash", F.lit(cfg.n_buckets)).cast("int").alias("bucket"),
-            )
-            seen_df = ckf.build_cuckoos(seen0, cfg.seen_filter_per_bucket)
-        self._seen_filter_df = local_checkpoint_no_stats(seen_df)
-
     def run_superstep(self, wave_id: int) -> dict:
-        """One wave. Returns per-wave metric dict; 'fetched'==0 with
-        'pending'==0 means the crawl is complete. stats['phase_secs']
+        """One wave. Returns the wave's counts (attempted, fetched,
+        bytes, reviews, outlinks, discovered); 'attempted' == 0 means
+        the frontier has drained and run() stops. stats['phase_secs']
         carries the wave's driver-side phase breakdown (plan build /
         checkpoint / metrics / commit)."""
         cfg = self.cfg
@@ -322,34 +391,11 @@ class CrawlEngine:
             now = time.time()
             _phases[name] = round(now - _pt[0], 2)
             _pt[0] = now
-        if self._frontier_cache is not None:
-            frontier = self._frontier_cache
-        else:
-            frontier = self.store.read_snapshot_table(
-                self.store.latest_wave(), "frontier"
-            )
-        if cfg.use_seen_filter and self._seen_filter_df is None:
-            self._ensure_seen_filter(frontier)
-
-        if cfg.cookies and self._cookie_df is None:
-            # resume path: reuse the committed jar; fresh start: empty
-            latest = self.store.latest_wave()
-            snap_ck = (
-                os.path.join(self.store._snap_dir(latest), "cookies")
-                if latest is not None
-                else None
-            )
-            if snap_ck and os.path.exists(snap_ck):
-                ck = self.store.read_snapshot_table(latest, "cookies")
-            else:
-                ck = self.spark.createDataFrame([], "host string, cookie string")
-            self._cookie_df = local_checkpoint_no_stats(ck)
-
+        self._load_state()
+        frontier = self._frontier_cache
         pending = frontier.filter(
             (F.col("state") == "pending") & (F.col("attempt") < cfg.max_attempts)
         )
-        if self._inc_hashes is None:
-            self._load_inc_state()
         if self._inc_state:
             # G3 probe-window admission (main.go:607-654): a pagination
             # row of an incremental task is schedulable only while its
@@ -427,25 +473,23 @@ class CrawlEngine:
 
         from go_scrapper_spark.functions.ua import ua_col
 
-        # one materialization per subtree per wave: [1] wave select +
-        # fetch join, [2] extraction, [3] candidate pipeline. Everything
-        # downstream — deltas, stats, the frontier merge — is a lazy
-        # projection over these three. All three are LAZY persists: the
-        # single metrics action below materializes them together in one
-        # driver round-trip (three eager localCheckpoints here would be
-        # three sequential job launches per wave — the per-wave fixed
-        # cost that dominates crawl wall time at sandbox payload).
-        # Persisted frames from transient waves stay cached until the
-        # next snapshot commit writes them (unpersisted after
-        # the snapshot commit). Recompute-on-eviction is deterministic
-        # BECAUSE every frontier checkpoint of the window is kept alive
-        # until the post-commit free step (_frontier_history) — these subtrees
-        # root their lineage there. The window is still only as
+        # The wave's heavy subtrees are LAZY persists: the fetch join
+        # (above), the per-attempt log, the extraction union and the
+        # candidate rows. Everything downstream — deltas, stats, the
+        # frontier merge — is a lazy projection over them. The frontier
+        # checkpoint fills the fetch/extraction/candidate caches along
+        # one lineage; the wave's one stats action then fills the log's
+        # cache and reads the rest warm (eager checkpoints here would be
+        # sequential job launches — the per-wave fixed cost that
+        # dominates crawl wall time at sandbox payload). Persisted
+        # frames stay cached until the next snapshot commit writes
+        # them. Recompute-on-eviction is deterministic BECAUSE every
+        # checkpoint they root in is kept alive until the post-commit
+        # free step (_supersede). The window is still only as
         # fault-tolerant as localCheckpoint itself: fine in local mode,
         # while on a cluster an executor loss inside a window loses
         # checkpoint blocks and the run restarts from the last snapshot
         # (which is exactly what the snapshot store is for).
-        mat = lambda df: df.persist()  # noqa: E731
 
         # one log row per ATTEMPT (the reference logs each retry):
         # attempt index i gets 503 while transient, then 200/404
@@ -460,7 +504,7 @@ class CrawlEngine:
                 F.broadcast(self._cookie_df), "host", "left"
             )
             ck_cols = ["cookie"]
-        fetch_log = mat(
+        fetch_log = (
             log_src.select(
                 F.lit(wave_id).cast("long").alias("wave_id"),
                 "host", "url", "depth", "seq", "html", "_fa", *ck_cols,
@@ -485,9 +529,10 @@ class CrawlEngine:
                 ).otherwise(F.lit(0)).cast("long").alias("n_bytes"),
                 *ck_cols,
             )
+            .persist()
         )
         ok = fetched.filter(F.col("_succ"))
-        union = mat(extract_pages(ok))
+        union = extract_pages(ok).persist()
         self._pending_mats += [fetch_log, union]
 
         reviews = self._finish_reviews(union.filter(F.col("kind") == "review"), wave_id)
@@ -499,28 +544,23 @@ class CrawlEngine:
             "business_id", "review_count", "non_rec_count", "agg_score",
         )
 
-        new_rows = mat(self._new_frontier_rows(union, frontier, wave_id))
+        new_rows = self._new_frontier_rows(union, frontier, wave_id).persist()
         self._pending_mats.append(new_rows)
 
-        if cfg.use_seen_filter and self._seen_filter_df is not None:
+        if cfg.use_seen_filter:
             # fold this wave's delta into the seen-filter table — fully
             # distributed (groupBy bucket + a per-bucket numpy kernel
             # inside merge_cuckoo_delta); no url_hash ever reaches the
-            # driver. The eager localCheckpoint truncates lineage so
-            # the table doesn't accrete a per-wave plan chain.
-            delta = new_rows.select(
-                "url_hash",
-                F.pmod("url_hash", F.lit(cfg.n_buckets)).cast("int").alias("bucket"),
-            )
-            merged = local_checkpoint_no_stats(
+            # driver. The eager checkpoint truncates lineage so the
+            # table doesn't accrete a per-wave plan chain.
+            self._seen_filter_df = self._supersede(
+                self._seen_filter_df,
                 ckf.merge_cuckoo_delta(
-                    self._seen_filter_df, delta, cfg.seen_filter_per_bucket
-                )
+                    self._seen_filter_df,
+                    new_rows.select("url_hash", self._url_bucket()),
+                    cfg.seen_filter_per_bucket,
+                ),
             )
-            # graveyard, not immediate unpersist: an in-flight async
-            # commit may still be writing the superseded filter table
-            self._frontier_history.append(self._seen_filter_df)
-            self._seen_filter_df = merged
 
         if cfg.cookies:
             # per-host jar update: the lexicographically-LAST successful
@@ -528,9 +568,8 @@ class CrawlEngine:
             # wave's within-host issue order) writes the host's next
             # cookie, a deterministic digest of that final URL (the
             # model computes the identical rule). O(hosts) state, eager
-            # checkpoint like the seen-filter table; the superseded frame
-            # goes to the checkpoint graveyard because this wave's
-            # pending fetch_log plan still reads it.
+            # checkpoint like the seen-filter table; this wave's pending
+            # fetch_log plan still reads the superseded jar.
             from pyspark.sql import Window
 
             w_last = Window.partitionBy("host").orderBy(
@@ -548,16 +587,15 @@ class CrawlEngine:
                     ).alias("cookie"),
                 )
             )
-            merged_ck = local_checkpoint_no_stats(
+            self._cookie_df = self._supersede(
+                self._cookie_df,
                 self._cookie_df.alias("o")
                 .join(last.alias("n"), "host", "full")
                 .select(
                     "host",
                     F.coalesce(F.col("n.cookie"), F.col("o.cookie")).alias("cookie"),
-                )
+                ),
             )
-            self._frontier_history.append(self._cookie_df)
-            self._cookie_df = merged_ck
 
         # frontier merge (MERGE INTO on Iceberg; full-rewrite on parquet
         # store). With in-wave retries a dequeued URL always terminates:
@@ -584,88 +622,44 @@ class CrawlEngine:
         )
 
         seen_delta = new_rows.select(
-            "url_hash",
-            F.pmod(F.col("url_hash"), F.lit(cfg.n_buckets)).cast("int").alias("bucket"),
-            F.lit(wave_id).cast("long").alias("wave_id"),
+            "url_hash", self._url_bucket(), F.lit(wave_id).cast("long").alias("wave_id"),
         )
 
-        # Materialize the wave's persisted chain LINEARLY before any
-        # multi-branch job touches it: new_rows → union → fetched is one
-        # lineage, so a single action fills all three caches at full
-        # parallelism with zero contention. Without this, the metrics
-        # crossJoin's branches race on the shared uncached persists and
-        # tasks stall on each other's cache-block locks — measured at
-        # 16c/n_biz=24k as ~4x total executor-time inflation versus the
-        # 4-core run of the SAME job (the round-3 "fold everything into
-        # one action" layout was right for the 6k-payload driver floor
-        # and wrong for wave-dominated payloads). The frontier
-        # localCheckpoint below doubles as the materializer on every
-        # wave (its heavy branch IS that lineage), so a wave costs
-        # exactly two driver actions; commit waves then hand the warm
-        # caches to the (async) table writers.
-        maybe_ckpt = (
-            cfg.checkpoint_every <= 1
-            or wave_id % cfg.checkpoint_every == 0
-            or wave_id >= cfg.max_supersteps
-        )
-        # BOTH wave kinds now checkpoint the frontier eagerly and keep
-        # it as the in-memory frontier for the next wave (the heavy
-        # branch of frontier_next IS the wave's persisted lineage, so
-        # this doubles as the linear cache materializer). Keeping the
-        # frontier in memory across commits removes the next wave's
-        # read-back of the just-written snapshot — the dependency that
-        # would otherwise force the async commit to be joined
-        # immediately. The superseded checkpoint is NOT freed here:
-        # this window's pending persists recompute through it on
-        # eviction, so it lives until the commit's free step.
+        # The frontier checkpoint runs FIRST: the heavy branch of
+        # frontier_next is the new_rows → union → fetched lineage, so
+        # one job fills those caches at full parallelism. A multi-branch
+        # job over still-uncached persists (the stats crossJoin) would
+        # race on their cache-block locks — measured at 16c/n_biz=24k as
+        # ~4x total executor-time inflation versus the 4-core run of the
+        # SAME job. The checkpointed frontier stays in memory as the
+        # next wave's input, so that wave never reads back the snapshot
+        # the async commit is still writing.
         _ph("plan")
-        new_frontier = local_checkpoint_no_stats(frontier_next)
-        if self._frontier_cache is not None:
-            self._frontier_history.append(self._frontier_cache)
-        self._frontier_cache = new_frontier
+        new_frontier = self._frontier_cache = self._supersede(
+            self._frontier_cache, frontier_next
+        )
         _ph("ckpt")
 
-        if cfg.metrics:
-            # micro-job over the now-warm caches: crossJoin of the
-            # 1-row aggregates collapses the remaining collect
-            # round-trips into a single action
-            row = (
-                fetch_log.agg(
-                    F.count("*").alias("attempted"),
-                    F.count(F.when(F.col("status") == 200, 1)).alias("fetched"),
-                    F.sum("n_bytes").alias("bytes"),
-                )
-                .crossJoin(
-                    union.agg(
-                        F.count(F.when(F.col("kind") == "review", 1)).alias("reviews"),
-                        F.count(F.when(F.col("kind") == "outlink", 1)).alias("outlinks"),
-                    )
-                )
-                .crossJoin(new_rows.agg(F.count("*").alias("discovered")))
-                .collect()[0]
+        # the wave's counts, whatever cfg.metrics says: one aggregate
+        # job over the now-warm caches — a crossJoin of three 1-row
+        # aggregates, so the counters cost a single driver round-trip
+        row = (
+            fetch_log.agg(
+                F.count("*").alias("attempted"),
+                F.count(F.when(F.col("status") == 200, 1)).alias("fetched"),
+                F.sum("n_bytes").alias("bytes"),
             )
-            stats = {
-                "wave_id": wave_id,
-                "attempted": row["attempted"],
-                "fetched": row["fetched"],
-                "bytes": row["bytes"] or 0,
-                "reviews": row["reviews"],
-                "outlinks": row["outlinks"],
-                "discovered": row["discovered"],
-            }
-        else:
-            # no-metrics path: fetch_log is the one subtree the linear
-            # materialization above does not cover (it branches off
-            # fetched, now cached); new_rows is a cached scan
-            stats = {
-                "wave_id": wave_id,
-                "attempted": fetch_log.count(),
-                "fetched": 0, "bytes": 0, "reviews": 0, "outlinks": 0,
-                # discovered emitted on both paths so the committed
-                # metrics table carries the same rows regardless of
-                # cfg.metrics
-                "discovered": new_rows.count(),
-            }
+            .crossJoin(
+                union.agg(
+                    F.count(F.when(F.col("kind") == "review", 1)).alias("reviews"),
+                    F.count(F.when(F.col("kind") == "outlink", 1)).alias("outlinks"),
+                )
+            )
+            .crossJoin(new_rows.agg(F.count("*").alias("discovered")))
+            .collect()[0]
+        )
+        stats = {"wave_id": wave_id, **row.asDict()}
+        stats["bytes"] = stats["bytes"] or 0  # sum over an empty wave is null
         _ph("metrics")
         self._pending_metrics.extend(
             (wave_id, k, int(v)) for k, v in stats.items() if k != "wave_id"
@@ -688,29 +682,25 @@ class CrawlEngine:
             # snapshot carries the post-wave scheduler state
             self._update_inc_state(union, new_frontier)
 
-        is_checkpoint = maybe_ckpt or stats["attempted"] == 0
-        if is_checkpoint:
-            tables = {"frontier": new_frontier}
-            for name, dfs in self._pending_deltas.items():
-                acc = dfs[0]
-                for nxt in dfs[1:]:
-                    acc = acc.unionByName(nxt)
-                tables[name] = acc
+        # commit a resumable snapshot every checkpoint_every waves, on
+        # the last allowed wave, and on the wave that drains the frontier
+        if (
+            cfg.checkpoint_every <= 1
+            or wave_id % cfg.checkpoint_every == 0
+            or wave_id >= cfg.max_supersteps
+            or stats["attempted"] == 0
+        ):
+            tables = {
+                name: reduce(DataFrame.unionByName, dfs)
+                for name, dfs in self._pending_deltas.items()
+            }
             tables["metrics"] = self.spark.createDataFrame(
                 self._pending_metrics, "wave_id long, metric string, value long"
             )
-            tables.update(self._inc_tables())
-            if cfg.use_seen_filter and self._seen_filter_df is not None:
-                # filter table rides the snapshot → resume skips rebuild
-                tables[SEEN_FILTER_TABLE] = self._seen_filter_df
-            if cfg.cookies and self._cookie_df is not None:
-                # cookie jar rides the snapshot → resume carries state
-                tables["cookies"] = self._cookie_df
-            self._submit_commit(wave_id, tables)
+            self._submit_commit(wave_id, {**tables, **self._carried_tables()})
             _phases["commit_wait"] = self._last_commit_wait
         _ph("commit")
         fetched.unpersist()
-        stats["pending"] = None  # filled by run()
         stats["phase_secs"] = _phases
         return stats
 
@@ -718,15 +708,16 @@ class CrawlEngine:
         """Commit + cache-release, overlapped with the next wave. The
         pending state is snapshotted-and-swapped on the MAIN thread
         first, so the next wave accumulates into fresh lists while the
-        background thread writes and frees only this window's frames. The current frontier checkpoint is NOT
-        freed — the next wave plans from it (and every table the
-        commit writes roots in frames owned by this closure)."""
+        background thread writes and frees only this window's frames.
+        The live checkpoints are NOT freed — the next wave plans from
+        them (and every table the commit writes roots in frames owned
+        by this closure)."""
         from go_scrapper_spark.operators.dedupe import free_local_checkpoint
 
         mats_to_free = self._pending_mats
-        hist_to_free = self._frontier_history
+        hist_to_free = self._superseded
         self._pending_mats = []
-        self._frontier_history = []
+        self._superseded = []
         self._pending_deltas = {}
         self._pending_metrics = []
 
@@ -800,40 +791,21 @@ class CrawlEngine:
     #     (cuckoofilter.delete_hashes).
 
     def _current_frontier(self) -> DataFrame:
-        if self._frontier_cache is not None:
-            return self._frontier_cache
-        latest = self.store.latest_wave()
-        if latest is None:
-            raise ValueError("no committed snapshot to maintain")
-        return self.store.read_snapshot_table(latest, "frontier")
-
-    def _maintenance_commit(self, frontier: DataFrame) -> int:
-        """Commit an edited frontier (+ carried filter/cookie/inc
-        state) as snapshot latest+1 and make it the live frontier."""
         # join any in-flight async superstep commit FIRST: latest_wave()
         # read before that commit lands would hand out the same wave id
-        # and clobber the superstep's snapshot (a caller driving
-        # run_superstep directly never passes through flush_commits)
+        # to the maintenance snapshot and clobber the superstep's (a
+        # caller driving run_superstep directly never passes through
+        # flush_commits)
         self._join_commit()
-        if self._inc_hashes is None:
-            self._load_inc_state()
-        if self.cfg.use_seen_filter and self._seen_filter_df is None:
-            # carry the committed filter into the maintenance snapshot
-            # (membership is unchanged on this path — refresh edits
-            # only state/attempt; expire sets _seen_filter_df itself
-            # first)
-            self._ensure_seen_filter(frontier)
-        wave = (self.store.latest_wave() or 0) + 1
-        frontier = local_checkpoint_no_stats(frontier)
-        if self._frontier_cache is not None:
-            self._frontier_history.append(self._frontier_cache)
-        self._frontier_cache = frontier
-        tables = {"frontier": frontier, **self._inc_tables()}
-        if self.cfg.use_seen_filter and self._seen_filter_df is not None:
-            tables[SEEN_FILTER_TABLE] = self._seen_filter_df
-        if self.cfg.cookies and self._cookie_df is not None:
-            tables["cookies"] = self._cookie_df
-        self._submit_commit(wave, tables)
+        self._load_state()
+        return self._frontier_cache
+
+    def _maintenance_commit(self, frontier: DataFrame) -> int:
+        """Commit an edited frontier with the carried state as snapshot
+        latest+1 and make it the live frontier."""
+        wave = self.store.latest_wave() + 1
+        self._frontier_cache = self._supersede(self._frontier_cache, frontier)
+        self._submit_commit(wave, self._carried_tables())
         self._join_commit()
         return wave
 
@@ -876,36 +848,30 @@ class CrawlEngine:
         """Forget URLs entirely (frontier + seen filter); returns how
         many frontier rows were removed. Future discoveries of these
         URLs re-enter the crawl as if never seen."""
-        cfg = self.cfg
         frontier = self._current_frontier()
         targets = self._target_hashes(urls_df)
         # only keys actually present leave the filter — the cuckoo
         # delete contract forbids removing a never-inserted key (it
         # could evict an unrelated colliding fingerprint); checkpoint
         # pins the removal set before the frontier it derives from is
-        # swapped out underneath it
-        removals = (
+        # swapped out underneath it, and the maintenance commit's free
+        # step releases it once the frames derived from it are written
+        removals = local_checkpoint_no_stats(
             frontier.join(targets, "url_hash", "left_semi")
-            .select(
-                "url_hash",
-                F.pmod("url_hash", F.lit(cfg.n_buckets))
-                .cast("int")
-                .alias("bucket"),
-            )
-            .localCheckpoint(eager=True)
+            .select("url_hash", self._url_bucket())
         )
+        self._superseded.append(removals)
         n = removals.count()
         new_frontier = frontier.join(
             removals.select("url_hash").hint("shuffle_hash"),
             "url_hash",
             "left_anti",
         )
-        if cfg.use_seen_filter:
-            if self._seen_filter_df is None:
-                self._ensure_seen_filter(frontier)
-            updated = ckf.delete_hashes(self._seen_filter_df, removals)
-            self._frontier_history.append(self._seen_filter_df)
-            self._seen_filter_df = local_checkpoint_no_stats(updated)
+        if self.cfg.use_seen_filter:
+            self._seen_filter_df = self._supersede(
+                self._seen_filter_df,
+                ckf.delete_hashes(self._seen_filter_df, removals),
+            )
         self._maintenance_commit(new_frontier)
         return n
 
@@ -976,7 +942,7 @@ class CrawlEngine:
         # the exact anti-join — same result, scales past anti-join
         # comfort. The filter state is a TABLE cogrouped on bucket (no
         # driver dict, no closure-captured bytes).
-        if cfg.use_seen_filter and self._seen_filter_df is not None:
+        if cfg.use_seen_filter:
             cand = ckf.filter_unseen_cuckoo_join(
                 cand, frontier.select("url_hash"), self._seen_filter_df,
                 cfg.n_buckets,
@@ -1016,7 +982,7 @@ class CrawlEngine:
         admissible, holds the window boundary closed until fetched —
         the reference's wg.Wait covers it); everything else NULL.
         All JVM-side expressions — no Python in the candidate path."""
-        inc_keys = list(self._inc_hashes or {})
+        inc_keys = list(self._inc_hashes)
         if not inc_keys:
             return F.lit(None).cast("int")
         is_inc = F.floor(F.col("seq") / SEED_SEQ_STRIDE).cast("long").isin(inc_keys)
@@ -1037,48 +1003,6 @@ class CrawlEngine:
             .when(is_inc & is_root, F.lit(-1))
             .otherwise(F.lit(None).cast("int"))
         )
-
-    def _inc_tables(self) -> dict:
-        """Snapshot tables carrying incremental scheduler state (empty
-        dict when the run has no incremental tasks)."""
-        if not self._inc_hashes:
-            return {}
-        from go_scrapper_spark.schemas import INC_HASHES_SCHEMA, INC_STATE_SCHEMA
-
-        hash_rows = [
-            (tk, h) for tk, hs in self._inc_hashes.items() for h in hs
-        ]
-        state_rows = [
-            (tk, st["unlocked"], st["done"], st["started"], st["hit"],
-             st["n_reviews"])
-            for tk, st in self._inc_state.items()
-        ]
-        return {
-            "inc_hashes": self.spark.createDataFrame(hash_rows, INC_HASHES_SCHEMA),
-            "inc_state": self.spark.createDataFrame(state_rows, INC_STATE_SCHEMA),
-        }
-
-    def _load_inc_state(self) -> None:
-        """Rebuild incremental state from the latest committed snapshot
-        (resume path). No-op into empty state when the run is not
-        incremental."""
-        self._inc_hashes, self._inc_state = {}, {}
-        latest = self.store.latest_wave()
-        if latest is None:
-            return
-        snap = self.store._snap_dir(latest)
-        if not os.path.exists(os.path.join(snap, "inc_hashes")):
-            return
-        for r in self.store.read_snapshot_table(latest, "inc_hashes").collect():
-            self._inc_hashes.setdefault(int(r["task_key"]), [])
-            self._inc_hashes[int(r["task_key"])].append(r["review_hash"])
-        self._inc_hashes = {k: tuple(v) for k, v in self._inc_hashes.items()}
-        for r in self.store.read_snapshot_table(latest, "inc_state").collect():
-            self._inc_state[int(r["task_key"])] = {
-                "unlocked": int(r["unlocked"]), "done": bool(r["done"]),
-                "started": bool(r["started"]), "hit": bool(r["hit"]),
-                "n_reviews": int(r["n_reviews"]),
-            }
 
     def _update_inc_state(self, union: DataFrame, frontier_next: DataFrame) -> None:
         """Per-task window-boundary bookkeeping (main.go:615-641):
@@ -1210,8 +1134,7 @@ class CrawlEngine:
         df = self.store.read_appended("extracted")
         if df is None:
             return None
-        if self._inc_hashes is None:
-            self._load_inc_state()
+        self._load_state()
         if self._inc_hashes:
             df = truncate_per_task(df, self._inc_hashes, SEED_SEQ_STRIDE)
         return df.orderBy(*order_cols())
@@ -1220,17 +1143,13 @@ class CrawlEngine:
         """True iff any incremental task matched a seen hash during the
         crawl (drives the NO_REVIEWS_SINCE_LAST_MATCH status,
         main.go:953-956)."""
-        if self._inc_hashes is None:
-            self._load_inc_state()
+        self._load_state()
         return any(st["hit"] for st in self._inc_state.values())
 
     def _commit(self, wave_id: int, tables: dict) -> None:
-        part = (
-            {"frontier": ["host_bucket"]} if self.cfg.partition_frontier else None
-        )
         if self.cfg.write_partitions:
             tables = {
                 name: df.coalesce(self.cfg.write_partitions)
                 for name, df in tables.items()
             }
-        self.store.commit(wave_id, tables, partition_by=part)
+        self.store.commit(wave_id, tables)

@@ -34,8 +34,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 
 # delta tables: one slice per snapshot, readers union across snapshots
-# (everything else in a snapshot — frontier, inc_*, seen_cuckoo — is
-# full state, latest snapshot wins)
+# (everything else in a snapshot — frontier, seen_cuckoo, cookies,
+# inc_* — is full state, latest snapshot wins: read_latest)
 APPEND_TABLES = ("extracted", "fetch_log", "pagetext", "pagemeta", "seen", "metrics")
 
 
@@ -68,8 +68,7 @@ class SnapshotStore:
 
     # -- commit / read ---------------------------------------------------------
 
-    def commit(self, wave_id: int, tables: dict[str, DataFrame],
-               partition_by: dict[str, list[str]] | None = None) -> dict:
+    def commit(self, wave_id: int, tables: dict[str, DataFrame]) -> dict:
         """Write all tables for a wave, then the manifest (atomic rename).
 
         Table writes run CONCURRENTLY (one driver thread per table —
@@ -85,10 +84,7 @@ class SnapshotStore:
 
         def write_one(item):
             name, df = item
-            writer = df.write.mode("overwrite")
-            for col in (partition_by or {}).get(name, []):
-                writer = writer.partitionBy(col)
-            writer.parquet(os.path.join(snap, name))
+            df.write.mode("overwrite").parquet(os.path.join(snap, name))
 
         with ThreadPoolExecutor(max_workers=min(8, max(len(tables), 1))) as ex:
             # list() re-raises the first writer exception BEFORE the
@@ -120,6 +116,18 @@ class SnapshotStore:
 
     def read_snapshot_table(self, wave_id: int, name: str) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self._snap_dir(wave_id), name))
+
+    def read_latest(self, name: str) -> DataFrame | None:
+        """Table ``name`` of the latest committed snapshot, or None when
+        nothing is committed or that snapshot's manifest does not list
+        the table."""
+        wave = self.latest_wave()
+        if wave is None:
+            return None
+        with open(self._manifest_path(wave)) as f:
+            if name not in json.load(f)["tables"]:
+                return None
+        return self.read_snapshot_table(wave, name)
 
     def read_appended(self, name: str, up_to_wave: int | None = None) -> DataFrame | None:
         """Union of a delta table across all committed snapshots."""

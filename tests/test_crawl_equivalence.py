@@ -3,6 +3,7 @@ resume-idempotence (§5.2-4): the Spark engine must reproduce the
 pure-Python reference model's exact fetch log and final state, and a
 killed run must resume without re-fetching or double-counting."""
 
+import json
 import shutil
 import tempfile
 
@@ -335,3 +336,89 @@ def test_duplicate_robots_rows_rejected_before_seed(spark, tmp_path):
     with pytest.raises(ValueError, match=r"www\.host0\.example"):
         CrawlEngine(spark, pages, twice, store, CrawlConfig())
     assert store.latest_wave() is None
+
+
+def test_cookie_jar_rides_maintenance_snapshot(spark, tmp_path):
+    """A fresh engine that resumes with a maintenance op before any
+    wave commits the cookie jar with the edited frontier: every
+    snapshot's manifest lists `cookies`, and the crawl that follows
+    attaches the same jars as the model (the maintenance snapshot
+    shifts later waves' ids by one, so wave_id is left out)."""
+    store = SnapshotStore(spark, str(tmp_path))
+    pages = sw.generate_pages_df(spark, CFG, n_partitions=4)
+    robots = sw.robots_df(spark, CFG)
+
+    def engine(max_supersteps=1000):
+        return CrawlEngine(
+            spark, pages, robots, store,
+            CrawlConfig(
+                fail_attempts_col=lambda: sw.fail_attempts_col(CFG),
+                cookies=True,
+                max_supersteps=max_supersteps,
+            ),
+        )
+
+    engine(max_supersteps=2).run(_seeds(spark))
+    eng = engine()
+    assert eng.refresh_urls(spark.createDataFrame([], "url string")) == 0
+    eng.run()
+
+    got = sorted(
+        tuple(r)
+        for r in store.read_appended("fetch_log")
+        .select("host", "url", "depth", "seq", "attempt", "status", "cookie")
+        .collect()
+    )
+    m = ModelCrawl(CFG, cookies=True).run()
+    assert got == sorted(row[1:] for row in m["fetch_log"])
+    for wave in store.committed_waves():
+        with open(store._manifest_path(wave)) as f:
+            assert "cookies" in json.load(f)["tables"], wave
+
+
+def _check_metrics_table(store, total):
+    """Every wave's committed counters equal the same aggregates of
+    the tables committed with it, and run()'s totals sum them."""
+    got: dict[int, dict[str, int]] = {}
+    for r in store.read_appended("metrics").collect():
+        got.setdefault(r["wave_id"], {})[r["metric"]] = r["value"]
+    log = {
+        r["wave_id"]: (r["attempted"], r["fetched"], r["bytes"])
+        for r in store.read_appended("fetch_log")
+        .groupBy("wave_id")
+        .agg(
+            F.count("*").alias("attempted"),
+            F.count(F.when(F.col("status") == 200, 1)).alias("fetched"),
+            F.sum("n_bytes").alias("bytes"),
+        )
+        .collect()
+    }
+    reviews = dict(store.read_appended("extracted").groupBy("wave_id").count().collect())
+    seen = dict(store.read_appended("seen").groupBy("wave_id").count().collect())
+    assert sorted(got) == list(range(1, total["supersteps"] + 1))
+    for wave, m in got.items():
+        assert set(m) == {"attempted", "fetched", "bytes", "reviews",
+                          "outlinks", "discovered"}, wave
+        assert (m["attempted"], m["fetched"], m["bytes"]) == log.get(wave, (0, 0, 0)), wave
+        assert m["reviews"] == reviews.get(wave, 0), wave
+        assert m["discovered"] == seen.get(wave, 0), wave
+    for k in ("attempted", "fetched", "bytes", "reviews"):
+        assert total[k] == sum(m[k] for m in got.values()), k
+    assert total["fetched"] > 0 and total["reviews"] > 0
+
+
+@pytest.mark.parametrize("metrics", [True, False])
+def test_metrics_table_matches_committed_tables(spark, run, tmp_path, metrics):
+    """cfg.metrics is accepted and ignored: both settings commit the
+    real per-wave counters."""
+    if metrics:
+        _eng, store, total, _m = run
+    else:
+        store = SnapshotStore(spark, str(tmp_path))
+        pages = sw.generate_pages_df(spark, CFG, n_partitions=4)
+        total = CrawlEngine(
+            spark, pages, sw.robots_df(spark, CFG), store,
+            CrawlConfig(fail_attempts_col=lambda: sw.fail_attempts_col(CFG),
+                        metrics=False),
+        ).run(_seeds(spark))
+    _check_metrics_table(store, total)

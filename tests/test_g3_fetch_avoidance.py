@@ -198,8 +198,7 @@ def test_final_output_contract_vs_full_crawl(spark, runs):
 
 
 def test_scale_mode_combined_equivalence(spark, runs):
-    """All scale features at once — partition_frontier (host_bucket
-    partitioned snapshot writes), use_seen_filter (cuckoo-table
+    """All scale features at once — use_seen_filter (cuckoo-table
     cogroup seen-filter), checkpoint_every batching — under incremental seeds
     must still reproduce the model's exact fetch log."""
     _eng, _store, m_inc, _mf = runs
@@ -212,7 +211,7 @@ def test_scale_mode_combined_equivalence(spark, runs):
             CrawlConfig(
                 fail_attempts_col=lambda: sw.fail_attempts_col(CFG),
                 use_seen_filter=True, seen_filter_per_bucket=64,
-                partition_frontier=True, checkpoint_every=3,
+                checkpoint_every=3,
             ),
         )
         eng.run(_seeds(spark, LAST_HASHES))

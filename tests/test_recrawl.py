@@ -224,3 +224,23 @@ def test_expire_then_relink_readmits_only_linked_urls(spark, done):
     assert f2[linked_seed][0] == "fetched"
     assert orphan not in f2
 
+
+
+def test_expire_frees_its_checkpoints(spark, tmp_path):
+    """Repeated expire_urls calls leave nothing persisted behind: of
+    the RDDs persisted after the crawl, each call only swaps the live
+    frontier and seen-filter checkpoints for new ones; its removal-set
+    checkpoint is freed with the superseded frames."""
+    store = SnapshotStore(spark, str(tmp_path))
+    eng = _engine(
+        spark, store, use_seen_filter=True, seen_filter_per_bucket=64,
+    )
+    eng.run(_seeds(spark))
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    fetched = sorted(u for u, (st, _a) in _frontier_urls(store).items()
+                     if st == "fetched")
+    for url in fetched[:3]:
+        assert eng.expire_urls(spark.createDataFrame([(url,)], "url string")) == 1
+        new = set(jsc.getPersistentRDDs().keySet()) - before
+        assert len(new) <= 2, sorted(new)

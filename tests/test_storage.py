@@ -77,3 +77,15 @@ def test_read_appended_unions_committed_only(spark, store):
     os.makedirs(os.path.join(store._snap_dir(3), "d"), exist_ok=True)
     assert store.read_appended("d").count() == 8
     assert store.read_appended("d", up_to_wave=1).count() == 3
+
+
+def test_read_latest_follows_latest_manifest(spark, store):
+    """read_latest reads only what the latest committed manifest lists:
+    nothing before the first commit, a table dropped from a later
+    snapshot is gone, and an uncommitted wave is ignored."""
+    assert store.read_latest("t0") is None
+    store.commit(1, {"t0": spark.range(3), "t1": spark.range(4)})
+    store.commit(2, {"t0": spark.range(5)})
+    os.makedirs(os.path.join(store._snap_dir(3), "t1"), exist_ok=True)
+    assert store.read_latest("t0").count() == 5
+    assert store.read_latest("t1") is None
