@@ -67,10 +67,12 @@ class CrawlConfig:
     # action in run_superstep (callers that still pass it keep working)
     metrics: bool = True
     # small-file control for the parquet-snapshot backend: coalesce each
-    # delta table to this many files before write. At cluster scale this
-    # is replaced by Iceberg bucket partitioning + target-file-size
-    # compaction; locally it avoids 64 tiny files per table per wave.
-    write_partitions: int | None = 8
+    # table to this many files before write. One file per table suits
+    # small waves (every write task holds a core the next wave's
+    # checkpoint queues behind); raise it to fan out the encoding of
+    # large waves (bench.py passes 32). At cluster scale Iceberg bucket
+    # partitioning + target-file-size compaction replaces it.
+    write_partitions: int | None = 1
     # checkpoint interval: commit a resumable snapshot every K waves.
     # Intermediate waves keep the frontier as an eager localCheckpoint
     # (lineage truncated, no table commit) and accumulate deltas in
@@ -474,18 +476,18 @@ class CrawlEngine:
         from go_scrapper_spark.functions.ua import ua_col
 
         # The wave's heavy subtrees are LAZY persists: the fetch join
-        # (above), the per-attempt log, the extraction union and the
-        # candidate rows. Everything downstream — deltas, stats, the
-        # frontier merge — is a lazy projection over them. The frontier
-        # checkpoint fills the fetch/extraction/candidate caches along
-        # one lineage; the wave's one stats action then fills the log's
-        # cache and reads the rest warm (eager checkpoints here would be
-        # sequential job launches — the per-wave fixed cost that
-        # dominates crawl wall time at sandbox payload). Persisted
-        # frames stay cached until the next snapshot commit writes
-        # them. Recompute-on-eviction is deterministic BECAUSE every
-        # checkpoint they root in is kept alive until the post-commit
-        # free step (_supersede). The window is still only as
+        # (above), the extraction union and the candidate rows.
+        # Everything downstream — the per-attempt log, deltas, stats,
+        # the frontier merge — is a lazy projection over them. The
+        # frontier checkpoint fills all three caches along one lineage;
+        # the wave's one stats action reads them warm (eager checkpoints
+        # here would be sequential job launches — the per-wave fixed
+        # cost that dominates crawl wall time at sandbox payload).
+        # Persisted frames stay cached until the next snapshot commit
+        # writes them, so with checkpoint_every=K the fetch cache holds
+        # K waves of page bodies. Recompute-on-eviction is deterministic
+        # BECAUSE every checkpoint they root in is kept alive until the
+        # post-commit free step (_supersede). The window is still only as
         # fault-tolerant as localCheckpoint itself: fine in local mode,
         # while on a cluster an executor loss inside a window loses
         # checkpoint blocks and the run restarts from the last snapshot
@@ -529,11 +531,10 @@ class CrawlEngine:
                 ).otherwise(F.lit(0)).cast("long").alias("n_bytes"),
                 *ck_cols,
             )
-            .persist()
         )
         ok = fetched.filter(F.col("_succ"))
         union = extract_pages(ok).persist()
-        self._pending_mats += [fetch_log, union]
+        self._pending_mats += [fetched, union]
 
         reviews = self._finish_reviews(union.filter(F.col("kind") == "review"), wave_id)
         pagetexts = union.filter(F.col("kind") == "pagetext").select(
@@ -628,7 +629,7 @@ class CrawlEngine:
         # The frontier checkpoint runs FIRST: the heavy branch of
         # frontier_next is the new_rows → union → fetched lineage, so
         # one job fills those caches at full parallelism. A multi-branch
-        # job over still-uncached persists (the stats crossJoin) would
+        # job over still-uncached persists (the stats union) would
         # race on their cache-block locks — measured at 16c/n_biz=24k as
         # ~4x total executor-time inflation versus the 4-core run of the
         # SAME job. The checkpointed frontier stays in memory as the
@@ -641,25 +642,24 @@ class CrawlEngine:
         _ph("ckpt")
 
         # the wave's counts, whatever cfg.metrics says: one aggregate
-        # job over the now-warm caches — a crossJoin of three 1-row
-        # aggregates, so the counters cost a single driver round-trip
-        row = (
-            fetch_log.agg(
-                F.count("*").alias("attempted"),
-                F.count(F.when(F.col("status") == 200, 1)).alias("fetched"),
-                F.sum("n_bytes").alias("bytes"),
-            )
-            .crossJoin(
-                union.agg(
-                    F.count(F.when(F.col("kind") == "review", 1)).alias("reviews"),
-                    F.count(F.when(F.col("kind") == "outlink", 1)).alias("outlinks"),
-                )
-            )
-            .crossJoin(new_rows.agg(F.count("*").alias("discovered")))
-            .collect()[0]
-        )
-        stats = {"wave_id": wave_id, **row.asDict()}
-        stats["bytes"] = stats["bytes"] or 0  # sum over an empty wave is null
+        # over a union of narrow projections of the three caches the
+        # checkpoint just filled. A fetched row logs _n_attempts
+        # attempts, one 200 with the page's bytes on success; a sum
+        # over an empty wave is null.
+        counts = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), [
+            fetched.select(
+                F.col("_n_attempts").alias("attempted"),
+                F.col("_succ").cast("int").alias("fetched"),
+                F.when(F.col("_succ"), F.length("html")).alias("bytes"),
+            ),
+            union.select(
+                (F.col("kind") == "review").cast("int").alias("reviews"),
+                (F.col("kind") == "outlink").cast("int").alias("outlinks"),
+            ),
+            new_rows.select(F.lit(1).alias("discovered")),
+        ])
+        row = counts.agg(*(F.sum(c).alias(c) for c in counts.columns)).collect()[0]
+        stats = {"wave_id": wave_id, **{k: v or 0 for k, v in row.asDict().items()}}
         _ph("metrics")
         self._pending_metrics.extend(
             (wave_id, k, int(v)) for k, v in stats.items() if k != "wave_id"
@@ -700,7 +700,6 @@ class CrawlEngine:
             self._submit_commit(wave_id, {**tables, **self._carried_tables()})
             _phases["commit_wait"] = self._last_commit_wait
         _ph("commit")
-        fetched.unpersist()
         stats["phase_secs"] = _phases
         return stats
 

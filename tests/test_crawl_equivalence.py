@@ -10,6 +10,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from go_scrapper_spark.functions.extract import extract_page
 from go_scrapper_spark.plans.crawl import CrawlConfig, CrawlEngine
 from go_scrapper_spark.plans.reference_model import ModelCrawl
 from go_scrapper_spark.plans.search import resolve_profile_keys
@@ -395,16 +396,29 @@ def _check_metrics_table(store, total):
     }
     reviews = dict(store.read_appended("extracted").groupBy("wave_id").count().collect())
     seen = dict(store.read_appended("seen").groupBy("wave_id").count().collect())
+    # outlinks: the outlink rows extract_page returns for each page a
+    # wave fetched, from the synthetic web's bodies and the fpo flag of
+    # the committed frontier
+    bodies = {u: body for biz in range(CFG.n_biz)
+              for u, _ts, body, _text, _lang in sw.pages_for_biz(CFG, biz)}
+    fpo = dict(store.read_latest("frontier").select("url", "fpo").collect())
+    outlinks: dict[int, int] = {}
+    for r in store.read_appended("fetch_log").filter(F.col("status") == 200).collect():
+        rows = extract_page(r["url"], bodies[r["url"]], r["depth"], r["seq"], fpo[r["url"]])
+        outlinks[r["wave_id"]] = (outlinks.get(r["wave_id"], 0)
+                                  + sum(row["kind"] == "outlink" for row in rows))
     assert sorted(got) == list(range(1, total["supersteps"] + 1))
     for wave, m in got.items():
         assert set(m) == {"attempted", "fetched", "bytes", "reviews",
                           "outlinks", "discovered"}, wave
         assert (m["attempted"], m["fetched"], m["bytes"]) == log.get(wave, (0, 0, 0)), wave
         assert m["reviews"] == reviews.get(wave, 0), wave
+        assert m["outlinks"] == outlinks.get(wave, 0), wave
         assert m["discovered"] == seen.get(wave, 0), wave
     for k in ("attempted", "fetched", "bytes", "reviews"):
         assert total[k] == sum(m[k] for m in got.values()), k
     assert total["fetched"] > 0 and total["reviews"] > 0
+    assert sum(outlinks.values()) > 0
 
 
 @pytest.mark.parametrize("metrics", [True, False])
@@ -422,3 +436,26 @@ def test_metrics_table_matches_committed_tables(spark, run, tmp_path, metrics):
                         metrics=False),
         ).run(_seeds(spark))
     _check_metrics_table(store, total)
+
+
+def test_default_commit_writes_one_file_per_table(run):
+    """Under the default config every snapshot manifest lists exactly
+    one parquet file per table."""
+    _eng, store, _total, _m = run
+    for wave in store.committed_waves():
+        with open(store._manifest_path(wave)) as f:
+            files = json.load(f)["files"]
+        assert files and all(len(fs) == 1 for fs in files.values()), (wave, files)
+
+
+def test_write_partitions_fans_out_the_commit(spark, tmp_path):
+    """write_partitions=3 writes a table of at least 3 input partitions
+    as more than one file and no more than 3."""
+    store = SnapshotStore(spark, str(tmp_path))
+    eng = CrawlEngine(spark, None, sw.robots_df(spark, CFG), store,
+                      CrawlConfig(write_partitions=3))
+    eng._commit(1, {"t": spark.range(0, 64, 1, numPartitions=8)})
+    with open(store._manifest_path(1)) as f:
+        n_files = len(json.load(f)["files"]["t"])
+    assert 1 < n_files <= 3
+    assert store.read_snapshot_table(1, "t").count() == 64

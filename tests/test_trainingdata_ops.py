@@ -294,6 +294,25 @@ def test_pagerank_lite_hand_computed(spark):
     assert r == {1: 638_750, 2: 575_000, 3: 575_000}
 
 
+def test_pagerank_lite_releases_its_caches(spark):
+    """pagerank_lite frees its persisted edge and vertex frames and its
+    round checkpoint once the ranks are materialized: repeated calls
+    leave no persisted RDD behind."""
+    from go_scrapper_spark.operators.linkrank import pagerank_lite
+
+    jsc = spark.sparkContext._jsc
+    verts = spark.createDataFrame([(1,), (2,), (3,)], "v long")
+    edges = spark.createDataFrame([(1, 2), (2, 1), (1, 3)], "src long, dst long")
+    before = set(jsc.getPersistentRDDs().keySet())
+    for _ in range(2):
+        # checkpoint_every=2 takes a round checkpoint after iteration 2
+        ranks = pagerank_lite(verts, edges, iters=3, checkpoint_every=2)
+        # iter3: B = C = 150k + (850 * (638_750 div 2)) div 1000
+        assert {r["v"]: r["rank"] for r in ranks.collect()} == {
+            1: 638_750, 2: 421_468, 3: 421_468}
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+
+
 def test_stratified_sample_deterministic_hash(spark):
     import hashlib
 
