@@ -66,13 +66,11 @@ class CrawlConfig:
     # accepted and ignored: every wave counts through the one aggregate
     # action in run_superstep (callers that still pass it keep working)
     metrics: bool = True
-    # small-file control for the parquet-snapshot backend: coalesce each
-    # table to this many files before write. One file per table suits
-    # small waves (every write task holds a core the next wave's
-    # checkpoint queues behind); raise it to fan out the encoding of
-    # large waves (bench.py passes 32). At cluster scale Iceberg bucket
-    # partitioning + target-file-size compaction replaces it.
-    write_partitions: int | None = 1
+    # small-file control for the parquet-snapshot backend: files per
+    # table per commit. None sizes it from the page bytes the committed
+    # waves fetched (_commit); bench.py fixes 32 for its large waves. At
+    # cluster scale Iceberg target-file-size compaction replaces it.
+    write_partitions: int | None = None
     # checkpoint interval: commit a resumable snapshot every K waves.
     # Intermediate waves keep the frontier as an eager localCheckpoint
     # (lineage truncated, no table commit) and accumulate deltas in
@@ -482,11 +480,12 @@ class CrawlEngine:
         # frontier checkpoint fills all three caches along one lineage;
         # the wave's one stats action reads them warm (eager checkpoints
         # here would be sequential job launches — the per-wave fixed
-        # cost that dominates crawl wall time at sandbox payload).
+        # cost that dominates crawl wall time at sandbox payload; each
+        # cache filled by a later action costs it one more job).
         # Persisted frames stay cached until the next snapshot commit
-        # writes them, so with checkpoint_every=K the fetch cache holds
-        # K waves of page bodies. Recompute-on-eviction is deterministic
-        # BECAUSE every checkpoint they root in is kept alive until the
+        # writes them, so the fetch cache holds the page bodies of up to
+        # checkpoint_every waves. Recompute-on-eviction is deterministic
+        # BECAUSE every checkpoint they root in lives until the
         # post-commit free step (_supersede). The window is still only as
         # fault-tolerant as localCheckpoint itself: fine in local mode,
         # while on a cluster an executor loss inside a window loses
@@ -629,8 +628,8 @@ class CrawlEngine:
         # The frontier checkpoint runs FIRST: the heavy branch of
         # frontier_next is the new_rows → union → fetched lineage, so
         # one job fills those caches at full parallelism. A multi-branch
-        # job over still-uncached persists (the stats union) would
-        # race on their cache-block locks — measured at 16c/n_biz=24k as
+        # job over several still-uncached persists would race on
+        # their cache-block locks — measured at 16c/n_biz=24k as
         # ~4x total executor-time inflation versus the 4-core run of the
         # SAME job. The checkpointed frontier stays in memory as the
         # next wave's input, so that wave never reads back the snapshot
@@ -713,6 +712,7 @@ class CrawlEngine:
         by this closure)."""
         from go_scrapper_spark.operators.dedupe import free_local_checkpoint
 
+        page_bytes = sum(v for _w, k, v in self._pending_metrics if k == "bytes")
         mats_to_free = self._pending_mats
         hist_to_free = self._superseded
         self._pending_mats = []
@@ -721,7 +721,7 @@ class CrawlEngine:
         self._pending_metrics = []
 
         def _commit_and_free():
-            self._commit(wave_id, tables)
+            self._commit(wave_id, tables, page_bytes)
             # the window's frames are on disk now — release caches
             for df in hist_to_free:
                 free_local_checkpoint(df)
@@ -1145,10 +1145,11 @@ class CrawlEngine:
         self._load_state()
         return any(st["hit"] for st in self._inc_state.values())
 
-    def _commit(self, wave_id: int, tables: dict) -> None:
-        if self.cfg.write_partitions:
-            tables = {
-                name: df.coalesce(self.cfg.write_partitions)
-                for name, df in tables.items()
-            }
-        self.store.commit(wave_id, tables)
+    def _commit(self, wave_id: int, tables: dict, page_bytes: int = 0) -> None:
+        """Write one snapshot, each table coalesced to write_partitions
+        files or, by default, one file per 64 MiB of page bytes the
+        committed waves fetched, at most 8. One task encodes 64 MiB of
+        text in 0.44 s on a 4-core host (4 tasks: 0.29 s), so a small
+        window writes one file per table."""
+        n = self.cfg.write_partitions or min(8, 1 + page_bytes // (64 << 20))
+        self.store.commit(wave_id, {k: df.coalesce(n) for k, df in tables.items()})

@@ -448,14 +448,18 @@ def test_default_commit_writes_one_file_per_table(run):
         assert files and all(len(fs) == 1 for fs in files.values()), (wave, files)
 
 
-def test_write_partitions_fans_out_the_commit(spark, tmp_path):
-    """write_partitions=3 writes a table of at least 3 input partitions
-    as more than one file and no more than 3."""
+@pytest.mark.parametrize("write_partitions,page_bytes,n_files", [
+    (3, 0, 3), (3, 40 << 26, 3),
+    (None, 0, 1), (None, 3 << 26, 4), (None, 40 << 26, 8),
+])
+def test_commit_file_count(spark, tmp_path, write_partitions, page_bytes, n_files):
+    """write_partitions fixes the files per table; by default a commit
+    writes one per 64 MiB of page bytes its waves fetched, at least 1
+    and at most 8."""
     store = SnapshotStore(spark, str(tmp_path))
     eng = CrawlEngine(spark, None, sw.robots_df(spark, CFG), store,
-                      CrawlConfig(write_partitions=3))
-    eng._commit(1, {"t": spark.range(0, 64, 1, numPartitions=8)})
+                      CrawlConfig(write_partitions=write_partitions))
+    eng._commit(1, {"t": spark.range(0, 64, 1, numPartitions=16)}, page_bytes)
     with open(store._manifest_path(1)) as f:
-        n_files = len(json.load(f)["files"]["t"])
-    assert 1 < n_files <= 3
+        assert len(json.load(f)["files"]["t"]) == n_files
     assert store.read_snapshot_table(1, "t").count() == 64
