@@ -14,8 +14,7 @@ Layout
 - ``functions/`` : scalar/vectorized primitives (URL canon, Go-JSON hash,
                    HTML/JSON extraction, text stats)
 - ``sources/``   : synthetic web generator, snapshot storage, table loaders
-- ``operators/`` : wave selection, politeness, seen-filter, dedup,
-                   similarity, match
+- ``operators/`` : wave selection, politeness, dedup, similarity, match
 - ``plans/``     : the crawl superstep loop + pure-Python reference model
 - ``streaming/`` : batch sessionization (kept at this path because the
                    oracle suite imports it from here)

@@ -370,7 +370,10 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     localCheckpoint each round so lineage stays flat. This is the
     standard large/small-star simplification for shallow components; at
     10^10 edges you'd switch the inner join to the alternating-star
-    variant, same driver loop."""
+    variant, same driver loop.
+
+    The result is the last round's label checkpoint: once nothing reads
+    it any more, ``free_local_checkpoint(result)`` releases it."""
     sym = edges.select(F.col("src"), F.col("dst")).unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=True)  # materialize ONCE — the pair-generation
@@ -402,6 +405,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
         free_local_checkpoint(ckpt)
         ckpt = nxt
         labels = nxt.drop("_chg")
+        labels._ckpt_origin = getattr(nxt, "_ckpt_origin", nxt)
         if changed == 0:
             converged = True
             break

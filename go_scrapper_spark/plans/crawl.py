@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 
 from go_scrapper_spark.functions.extract import extract_pages
 from go_scrapper_spark.functions.urltools import canonicalize_udf
-from go_scrapper_spark.operators import cuckoofilter as ckf
 from go_scrapper_spark.operators.dedupe import local_checkpoint_no_stats
 from go_scrapper_spark.operators.politeness import apply_robots
 from go_scrapper_spark.operators.wave import host_budget, select_wave
@@ -48,8 +47,6 @@ from go_scrapper_spark.sources.storage import SnapshotStore
 RUN_TS = 1700000000  # single run-level scrape timestamp (P11 determinism)
 
 SEED_SEQ_STRIDE = 10_000_000  # seq space per task; outlink offsets nest inside
-
-SEEN_FILTER_TABLE = "seen_cuckoo"  # snapshot table holding the seen filter
 
 
 @dataclass
@@ -77,16 +74,6 @@ class CrawlConfig:
     # memory — identical semantics (a resume recomputes the uncommitted
     # waves deterministically), K× fewer commit round-trips.
     checkpoint_every: int = 1
-    # partitioned cuckoo seen-filter (SURVEY.md §4.2-2,
-    # operators/cuckoofilter.py): prefilter candidate URLs through
-    # per-bucket cuckoo tables so the exact anti-join touches only
-    # filter-positives. Semantics identical (no false negatives —
-    # tests/test_cuckoofilter.py), and the filter is deletion-capable,
-    # so expire_urls() retracts keys in place. The win appears when
-    # the frontier no longer fits a comfortable anti-join, i.e. at
-    # 10^8+. seen_filter_per_bucket sizes each new bucket's table.
-    use_seen_filter: bool = False
-    seen_filter_per_bucket: int = 100_000
     # cross-request cookie carry (S10 fidelity; reference
     # collyfunc.go:48,99-101,161-163): the reference keeps ONE global
     # []*http.Cookie that every response overwrites with its host's jar
@@ -160,14 +147,8 @@ class CrawlEngine:
         # waves (the parquet read of the latest snapshot right after a
         # resume)
         self._frontier_cache: DataFrame | None = None
-        # seen-filter state (use_seen_filter): the per-bucket cuckoo
-        # TABLE (ckf.CUCKOO_DDL) — held as an eagerly checkpointed
-        # DataFrame between waves and merged distributively
-        # (merge_cuckoo_delta). Filter bytes never touch the driver:
-        # the membership check cogroups candidates with it on bucket.
-        self._seen_filter_df: DataFrame | None = None
         # per-host cookie state (cfg.cookies): (host, cookie) table,
-        # O(hosts), eagerly checkpointed per wave like the seen filter.
+        # O(hosts), eagerly checkpointed per wave like the frontier.
         self._cookie_df: DataFrame | None = None
         # G3 incremental-crawl state (main.go:563-654): per-task
         # last_review_hashes and probe-window scheduler state. Both are
@@ -290,9 +271,9 @@ class CrawlEngine:
     # ------------------------------------------------------- carried state
     #
     # The full state a fresh engine needs to resume: the frontier, the
-    # seen filter (use_seen_filter), the cookie jar (cookies) and the
-    # incremental tables (a run with incremental tasks). Every snapshot
-    # commits all of it; a fresh engine loads it once.
+    # cookie jar (cookies) and the incremental tables (a run with
+    # incremental tasks). Every snapshot commits all of it; a fresh
+    # engine loads it once.
 
     def _load_state(self) -> None:
         """Fill the carried state from the latest committed snapshot,
@@ -307,20 +288,11 @@ class CrawlEngine:
     def _fill_state(self, frontier: DataFrame, read) -> None:
         """Set the live frontier and every carried table from
         ``read(name)`` — a frame, or None when the snapshot lacks it.
-        A missing table takes its fresh-start value: the seen filter is
-        built from the frontier, the cookie jar and the incremental
-        state start empty."""
+        A missing table takes its fresh-start value: the cookie jar and
+        the incremental state start empty."""
         cfg = self.cfg
         self._state_loaded = True
         self._frontier_cache = frontier
-        if cfg.use_seen_filter:
-            seen = read(SEEN_FILTER_TABLE)
-            if seen is None:
-                seen = ckf.build_cuckoos(
-                    frontier.select("url_hash", self._url_bucket()),
-                    cfg.seen_filter_per_bucket,
-                )
-            self._seen_filter_df = local_checkpoint_no_stats(seen)
         if cfg.cookies:
             jar = read("cookies")
             if jar is None:
@@ -343,8 +315,6 @@ class CrawlEngine:
     def _carried_tables(self) -> dict:
         """The full-state tables every snapshot commits."""
         tables = {"frontier": self._frontier_cache}
-        if self.cfg.use_seen_filter:
-            tables[SEEN_FILTER_TABLE] = self._seen_filter_df
         if self.cfg.cookies:
             tables["cookies"] = self._cookie_df
         if self._inc_hashes:
@@ -372,7 +342,7 @@ class CrawlEngine:
         return local_checkpoint_no_stats(new)
 
     def _url_bucket(self):
-        """The seen-filter bucket of a row's url_hash."""
+        """The bucket of a row's url_hash in the ``seen`` table."""
         return F.pmod("url_hash", F.lit(self.cfg.n_buckets)).cast("int").alias("bucket")
 
     # --------------------------------------------------------------- superstep
@@ -547,28 +517,13 @@ class CrawlEngine:
         new_rows = self._new_frontier_rows(union, frontier, wave_id).persist()
         self._pending_mats.append(new_rows)
 
-        if cfg.use_seen_filter:
-            # fold this wave's delta into the seen-filter table — fully
-            # distributed (groupBy bucket + a per-bucket numpy kernel
-            # inside merge_cuckoo_delta); no url_hash ever reaches the
-            # driver. The eager checkpoint truncates lineage so the
-            # table doesn't accrete a per-wave plan chain.
-            self._seen_filter_df = self._supersede(
-                self._seen_filter_df,
-                ckf.merge_cuckoo_delta(
-                    self._seen_filter_df,
-                    new_rows.select("url_hash", self._url_bucket()),
-                    cfg.seen_filter_per_bucket,
-                ),
-            )
-
         if cfg.cookies:
             # per-host jar update: the lexicographically-LAST successful
             # response of the wave per host (max (depth, seq, url) — the
             # wave's within-host issue order) writes the host's next
             # cookie, a deterministic digest of that final URL (the
             # model computes the identical rule). O(hosts) state, eager
-            # checkpoint like the seen-filter table; this wave's pending
+            # checkpoint like the frontier; this wave's pending
             # fetch_log plan still reads the superseded jar.
             from pyspark.sql import Window
 
@@ -779,15 +734,12 @@ class CrawlEngine:
     #
     #   refresh_urls — re-fetch KNOWN pages in place (state→pending,
     #     attempt→0). Seen-membership is untouched: the page is
-    #     re-fetched but its outlinks still dedup against the filter
-    #     (the filter never learns).
+    #     re-fetched but its outlinks still dedup against the frontier.
     #
-    #   expire_urls — FORGET pages: rows leave the frontier and their
-    #     keys leave the seen filter, so the next time any fetched page
-    #     links to them they are re-admitted as fresh discoveries.
-    #     This is the op that needs a deletion-capable filter: the
-    #     cuckoo filter retracts the keys in place
-    #     (cuckoofilter.delete_hashes).
+    #   expire_urls — FORGET pages: rows leave the frontier, the only
+    #     seen set the candidate anti-join reads, so the next time any
+    #     fetched page links to them they are re-admitted as fresh
+    #     discoveries.
 
     def _current_frontier(self) -> DataFrame:
         # join any in-flight async superstep commit FIRST: latest_wave()
@@ -844,34 +796,15 @@ class CrawlEngine:
         return n
 
     def expire_urls(self, urls_df: DataFrame) -> int:
-        """Forget URLs entirely (frontier + seen filter); returns how
-        many frontier rows were removed. Future discoveries of these
-        URLs re-enter the crawl as if never seen."""
+        """Forget URLs entirely; returns how many frontier rows were
+        removed. Future discoveries of these URLs re-enter the crawl as
+        if never seen."""
         frontier = self._current_frontier()
         targets = self._target_hashes(urls_df)
-        # only keys actually present leave the filter — the cuckoo
-        # delete contract forbids removing a never-inserted key (it
-        # could evict an unrelated colliding fingerprint); checkpoint
-        # pins the removal set before the frontier it derives from is
-        # swapped out underneath it, and the maintenance commit's free
-        # step releases it once the frames derived from it are written
-        removals = local_checkpoint_no_stats(
-            frontier.join(targets, "url_hash", "left_semi")
-            .select("url_hash", self._url_bucket())
+        n = frontier.join(targets, "url_hash", "left_semi").count()
+        self._maintenance_commit(
+            frontier.join(targets.hint("shuffle_hash"), "url_hash", "left_anti")
         )
-        self._superseded.append(removals)
-        n = removals.count()
-        new_frontier = frontier.join(
-            removals.select("url_hash").hint("shuffle_hash"),
-            "url_hash",
-            "left_anti",
-        )
-        if self.cfg.use_seen_filter:
-            self._seen_filter_df = self._supersede(
-                self._seen_filter_df,
-                ckf.delete_hashes(self._seen_filter_df, removals),
-            )
-        self._maintenance_commit(new_frontier)
         return n
 
     # --------------------------------------------------------------- helpers
@@ -936,28 +869,20 @@ class CrawlEngine:
                 (F.col("_p") % 2).cast("int").alias("fpo"),
             )
         )
-        # cross-superstep dedup (exact J3): with use_seen_filter, the
-        # per-bucket cuckoo pre-pass routes only filter-positives into
-        # the exact anti-join — same result, scales past anti-join
-        # comfort. The filter state is a TABLE cogrouped on bucket (no
-        # driver dict, no closure-captured bytes).
-        if cfg.use_seen_filter:
-            cand = ckf.filter_unseen_cuckoo_join(
-                cand, frontier.select("url_hash"), self._seen_filter_df,
-                cfg.n_buckets,
-            )
-        else:
-            # shuffle_hash hint, NOT broadcast: the frontier side is
-            # hundreds of thousands of URLs within a wave and 10^10 at
-            # the design scale — AQE happily broadcasts anything under
-            # the 64 MB threshold, and that broadcast BUILD is a
-            # single-threaded driver collect measured at 13-28 s per
-            # wave (the dominant serial term in the 4c→16c scaling gap).
-            # A shuffled hash anti-join is fully parallel on both sides
-            # and is the only shape that survives the design scale.
-            cand = cand.join(
-                frontier.select("url").hint("shuffle_hash"), "url", "left_anti"
-            )
+        # cross-superstep dedup (exact J3): anti-join against the
+        # frontier, which holds every URL ever admitted. shuffle_hash
+        # hint, NOT broadcast: the frontier side is hundreds of
+        # thousands of URLs within a wave and 10^10 at the design scale
+        # — AQE happily broadcasts anything under the 64 MB threshold,
+        # and that broadcast BUILD is a single-threaded driver collect
+        # measured at 13-28 s per wave (the dominant serial term in the
+        # 4c→16c scaling gap). A shuffled hash anti-join is fully
+        # parallel on both sides and is the only shape that survives
+        # the design scale. A URL-seen filter in front of it would not
+        # remove that shuffle (PLANS.md, "Seen check").
+        cand = cand.join(
+            frontier.select("url").hint("shuffle_hash"), "url", "left_anti"
+        )
         return cand.select(
             "url",
             F.xxhash64("url").alias("url_hash"),

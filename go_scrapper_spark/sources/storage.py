@@ -34,8 +34,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 
 # delta tables: one slice per snapshot, readers union across snapshots
-# (everything else in a snapshot — frontier, seen_cuckoo, cookies,
-# inc_* — is full state, latest snapshot wins: read_latest)
+# (everything else in a snapshot — frontier, cookies, inc_* — is
+# full state, latest snapshot wins: read_latest)
 APPEND_TABLES = ("extracted", "fetch_log", "pagetext", "pagemeta", "seen", "metrics")
 
 

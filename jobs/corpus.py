@@ -204,6 +204,7 @@ def build_corpus(spark, docs, min_tokens: int = 20, near_dup_matches: int = 6,
     survivors = dedupe.local_checkpoint_no_stats(deduped.join(
         losers.hint("shuffle_hash"), "doc_id", "left_anti"
     ))
+    dedupe.free_local_checkpoint(clusters)
     if verbose_counts:
         counts["after_near_dup"] = survivors.count()
     edges.unpersist()
@@ -343,6 +344,7 @@ def update_corpus(spark, existing, new_docs, min_tokens: int = 20,
     survivors = dedupe.local_checkpoint_no_stats(survivors.join(
         losers.hint("shuffle_hash"), "doc_id", "left_anti"
     ))
+    dedupe.free_local_checkpoint(clusters)
     counts["after_near_dup"] = survivors.count()
     edges.unpersist()
     dedupe.free_local_checkpoint(deduped)

@@ -198,9 +198,8 @@ def test_final_output_contract_vs_full_crawl(spark, runs):
 
 
 def test_scale_mode_combined_equivalence(spark, runs):
-    """All scale features at once — use_seen_filter (cuckoo-table
-    cogroup seen-filter), checkpoint_every batching — under incremental seeds
-    must still reproduce the model's exact fetch log."""
+    """checkpoint_every batching under incremental seeds must still
+    reproduce the model's exact fetch log."""
     _eng, _store, m_inc, _mf = runs
     base = tempfile.mkdtemp(prefix="crawl-g3scale-")
     try:
@@ -210,7 +209,6 @@ def test_scale_mode_combined_equivalence(spark, runs):
             spark, pages, sw.robots_df(spark, CFG), store,
             CrawlConfig(
                 fail_attempts_col=lambda: sw.fail_attempts_col(CFG),
-                use_seen_filter=True, seen_filter_per_bucket=64,
                 checkpoint_every=3,
             ),
         )

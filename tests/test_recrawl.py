@@ -1,23 +1,20 @@
-"""Recrawl/expiry maintenance primitives and the cuckoo seen filter
-inside the engine.
+"""Recrawl/expiry maintenance primitives inside the engine.
 
-The seen-filter mode must be fetch-log-identical to the exact
-anti-join (the filter has no false negatives), and the two
-maintenance ops must compose into the incremental-recrawl
-story: refresh a hub page -> it re-fetches; expire a leaf -> the next
-page that links to it re-admits it as a fresh discovery, while expired
-pages nobody links to again stay forgotten."""
+The crawl's seen check is the exact anti-join of each wave's outlink
+candidates against the frontier, so forgetting a URL is removing its
+frontier row. The two maintenance ops must compose into the
+incremental-recrawl story: refresh a hub page -> it re-fetches; expire
+a leaf -> the next page that links to it re-admits it as a fresh
+discovery, while expired pages nobody links to again stay forgotten;
+and repeated expiries leave no cached state behind."""
 
-import os
 import shutil
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
-from go_scrapper_spark.operators import cuckoofilter
 from go_scrapper_spark.plans.crawl import CrawlConfig, CrawlEngine
-from go_scrapper_spark.plans.reference_model import ModelCrawl
 from go_scrapper_spark.plans.search import resolve_profile_keys
 from go_scrapper_spark.sources import synthetic_web as sw
 from go_scrapper_spark.sources.storage import SnapshotStore
@@ -49,11 +46,6 @@ def _log(store):
     )
 
 
-@pytest.fixture(scope="module")
-def model():
-    return ModelCrawl(CFG).run()
-
-
 def _frontier_urls(store):
     return {
         r["url"]: (r["state"], r["attempt"])
@@ -63,99 +55,12 @@ def _frontier_urls(store):
     }
 
 
-def _model_frontier(model):
-    return {u: (r["state"], r["attempt"]) for u, r in model["frontier"].items()}
-
-
-def test_cuckoo_seen_filter_preserves_semantics(spark, model):
-    """use_seen_filter must yield the identical fetch log and final
-    frontier as the model."""
-    base = tempfile.mkdtemp(prefix="crawl-cuckoo-")
-    try:
-        store = SnapshotStore(spark, base)
-        eng = _engine(
-            spark, store,
-            use_seen_filter=True, seen_filter_per_bucket=64,
-            checkpoint_every=3,
-        )
-        eng.run(_seeds(spark))
-        assert _log(store) == sorted(model["fetch_log"])
-        assert _frontier_urls(store) == _model_frontier(model)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_cuckoo_resume_uses_committed_table(spark, model, monkeypatch):
-    """Kill after wave 2 -> the fresh engine must load the committed
-    seen_cuckoo snapshot table, never rebuild it, and still match the
-    model's log."""
-    base = tempfile.mkdtemp(prefix="crawl-cuckooresume-")
-    try:
-        store = SnapshotStore(spark, base)
-
-        def make():
-            return _engine(
-                spark, store,
-                use_seen_filter=True, seen_filter_per_bucket=64,
-            )
-
-        eng = make()
-        eng.seed(_seeds(spark))
-        eng.run_superstep(1)
-        eng.run_superstep(2)
-        eng.flush_commits()
-        assert os.path.exists(os.path.join(base, "snap-00002", "seen_cuckoo"))
-
-        def no_rebuild(*_a, **_k):
-            raise AssertionError("resume rebuilt the seen filter")
-
-        monkeypatch.setattr(cuckoofilter, "build_cuckoos", no_rebuild)
-        eng2 = make()
-        eng2.run()
-        assert _log(store) == sorted(model["fetch_log"])
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_filter_rebuilt_over_snapshot_without_filter_table(spark, model):
-    """Turning the filter on over a snapshot that carries no
-    seen_cuckoo table (a run started without the filter, or one that
-    committed a filter table under another name) rebuilds the filter
-    from the frontier and still matches the model."""
-    base = tempfile.mkdtemp(prefix="crawl-cuckoonotable-")
-    try:
-        store = SnapshotStore(spark, base)
-        eng = _engine(spark, store)
-        eng.seed(_seeds(spark))
-        eng.run_superstep(1)
-        eng.run_superstep(2)
-        eng.flush_commits()
-        assert not os.path.exists(
-            os.path.join(base, "snap-00002", "seen_cuckoo")
-        )
-        _engine(
-            spark, store, use_seen_filter=True, seen_filter_per_bucket=64,
-        ).run()
-        assert _log(store) == sorted(model["fetch_log"])
-        assert _frontier_urls(store) == _model_frontier(model)
-        assert os.path.exists(
-            os.path.join(
-                store._snap_dir(store.latest_wave()), "seen_cuckoo"
-            )
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
 @pytest.fixture(scope="module")
 def done(spark):
-    """A completed seen-filter crawl to run maintenance against."""
+    """A completed crawl to run maintenance against."""
     base = tempfile.mkdtemp(prefix="crawl-maint-")
     store = SnapshotStore(spark, base)
-    eng = _engine(
-        spark, store,
-        use_seen_filter=True, seen_filter_per_bucket=64,
-    )
+    eng = _engine(spark, store)
     eng.run(_seeds(spark))
     yield eng, store
     shutil.rmtree(base, ignore_errors=True)
@@ -229,12 +134,10 @@ def test_expire_then_relink_readmits_only_linked_urls(spark, done):
 def test_expire_frees_its_checkpoints(spark, tmp_path):
     """Repeated expire_urls calls leave nothing persisted behind: of
     the RDDs persisted after the crawl, each call only swaps the live
-    frontier and seen-filter checkpoints for new ones; its removal-set
-    checkpoint is freed with the superseded frames."""
+    frontier checkpoint for a new one, and the superseded frontier is
+    freed by the maintenance commit."""
     store = SnapshotStore(spark, str(tmp_path))
-    eng = _engine(
-        spark, store, use_seen_filter=True, seen_filter_per_bucket=64,
-    )
+    eng = _engine(spark, store)
     eng.run(_seeds(spark))
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet())
@@ -243,4 +146,4 @@ def test_expire_frees_its_checkpoints(spark, tmp_path):
     for url in fetched[:3]:
         assert eng.expire_urls(spark.createDataFrame([(url,)], "url string")) == 1
         new = set(jsc.getPersistentRDDs().keySet()) - before
-        assert len(new) <= 2, sorted(new)
+        assert len(new) <= 1, sorted(new)

@@ -76,6 +76,23 @@ def test_connected_components_long_chain_converges(spark):
     assert len(labels) == n
 
 
+def test_connected_components_releases_its_caches(spark):
+    """Freeing the returned labels releases the last round's label
+    checkpoint: repeated calls leave no persisted RDD behind."""
+    jsc = spark.sparkContext._jsc
+    verts = spark.createDataFrame([(i,) for i in range(6)], "doc long")
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (3, 4)], "src long, dst long"
+    )
+    before = set(jsc.getPersistentRDDs().keySet())
+    for _ in range(2):
+        labels = dedupe.connected_components(verts, edges)
+        assert {r["doc"]: r["cluster_id"] for r in labels.collect()} == {
+            0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 5}
+        dedupe.free_local_checkpoint(labels)
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+
+
 def test_repetition_signals(spark):
     rows = [
         (0, "spam spam spam spam spam spam"),       # all dup tokens, one bigram
