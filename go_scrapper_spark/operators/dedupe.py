@@ -243,7 +243,12 @@ def minhash_lsh_pairs(docs: DataFrame, k: int = 6, n: int = 3, bands: int = 3,
     Plan shape: signatures explode to one (band_id, band_key) row per
     band and candidates come from ONE self-equi-join on that composite
     key — one shuffle total, instead of ``bands`` separate self-joins
-    unioned (each with its own shuffle). Identical output."""
+    unioned (each with its own shuffle). Identical output.
+
+    The signature table is persisted for the two joins that read it;
+    once the result's consumers are materialized,
+    ``minhash_signatures(docs).unpersist()`` releases it (see
+    minhash_lsh_pairs_cross)."""
     sig = minhash_signatures(docs, k, n, id_col, text_col).persist()
     band_rows = _band_rows(sig, k, bands)
     a = band_rows.alias("a")
@@ -314,10 +319,12 @@ def minhash_lsh_pairs_cross(new_docs: DataFrame,
 
     Persist lifetime: the segment signatures (and the derived
     standing signatures, in the raw-docs path) stay cached
-    MEMORY_AND_DISK until the returned frame's consumers finish;
-    they are deliberately NOT unpersisted here because the returned
-    plan still reads them — callers running many segments in one
-    session should pass precomputed signature tables instead."""
+    MEMORY_AND_DISK because the returned plan still reads them. Once
+    its consumers are materialized, the caller releases them with
+    ``minhash_signatures(x, k, n, id_col, text_col).unpersist()`` for
+    each raw input ``x`` (``DataFrame.unpersist`` finds the cached plan
+    by sameResult), as ``jobs/corpus.py`` does after its checkpoint
+    of the anti-join."""
     if (existing_docs is None) == (existing_sigs is None):
         raise ValueError(
             "pass exactly one of existing_docs / existing_sigs")

@@ -7,10 +7,12 @@
         --out /corpus [--wet-out /corpus-wet] ...
 
 With ``--update-existing /corpus`` the job runs in INCREMENTAL mode:
-the input (either --docs or --warc) is treated as a new crawl segment,
-cleaned, and deduplicated against the standing corpus (exact content
-hashes + cross-corpus MinHash LSH — the standing corpus always wins);
---out receives only the appendable delta.
+the input (either --docs or --warc) is treated as a new crawl segment
+and goes through the same pipeline, which then also deduplicates it
+against the standing corpus (exact content hashes + cross-corpus
+MinHash LSH — the standing corpus always wins); --out receives only
+the appendable delta. Substring dedup (--substring-k) then works
+within the segment: the standing corpus's spans are not read.
 
 With ``--warc`` the pipeline starts from raw web archives — the
 Common-Crawl access pattern — and runs two extra front stages:
@@ -31,7 +33,11 @@ Stages (each a native declarative plan; one JSON summary line printed):
 
 1. quality gate    — textstats.text_quality keep-band (C4/Gopher shape)
 2. exact dedup     — md5 content-hash group-by, canonical = min doc_id
-3. near-dup prune  — MinHash+LSH candidate pairs with
+                     (incremental: after an anti-join against the
+                     standing corpus's content hashes)
+3. near-dup prune  — (incremental: first an anti-join against the
+                     cross-corpus LSH pairs, dedupe.minhash_lsh_pairs_cross)
+                     MinHash+LSH candidate pairs with
                      >= --near-dup-matches matching signature
                      components → connected components (min-label
                      propagation, dedupe.connected_components) → keep
@@ -53,7 +59,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import sys
 
 
 def warc_front_end(files_df, host_template_den: int = 0):
@@ -113,7 +118,8 @@ def warc_front_end(files_df, host_template_den: int = 0):
 def build_corpus(spark, docs, min_tokens: int = 20, near_dup_matches: int = 6,
                  eval_df=None, decontam_n: int = 8,
                  decontam_broadcast: bool = True,
-                 substring_k: int = 0, verbose_counts: bool = False):
+                 substring_k: int = 0, verbose_counts: bool = False,
+                 existing=None, existing_sigs=None):
     """Returns (result_df, stage_counts). Pure plan construction plus
     the stage-count actions; ``counts["stage_secs"]`` carries the wall
     seconds of each stage's materializing action (the eager stats-free
@@ -129,7 +135,28 @@ def build_corpus(spark, docs, min_tokens: int = 20, near_dup_matches: int = 6,
     decontamination — the RefinedWeb ordering: removing spans first
     would change content hashes under the exact/near-dup stages.
     Documents whose text empties (every token inside some repeated
-    span) drop from the corpus."""
+    span) drop from the corpus.
+
+    INCREMENTAL mode (``existing`` = the standing corpus): ``docs`` is
+    a new crawl segment, cleaned and deduplicated against the standing
+    corpus without re-processing it — the nightly operation of a
+    continuously-crawling pipeline. The result holds only the rows to
+    append; ``existing`` is never modified. Deliberately
+    corpus-stable, NOT identical to a full rebuild: the standing
+    corpus always wins. On top of the batch rules, a new doc drops
+    when its content hash is already in the standing corpus, or when
+    it near-dups a standing doc (cross LSH ≥ near_dup_matches).
+    Substring dedup works within the segment only: the standing
+    corpus's spans are not read. Pass ``existing_sigs`` (a stored
+    ``minhash_signatures`` table, ``--sigs`` in the CLI) and the
+    10^9-doc side is never re-shingled — the production nightly mode;
+    the standing corpus then contributes one content-hash anti-join
+    and the cross band join, materialized once. ``verbose_counts``
+    also counts the standing corpus (``counts["existing"]``, a full
+    scan).
+
+    The result carries its survivors checkpoint: once nothing reads it
+    any more, ``dedupe.free_local_checkpoint(result)`` releases it."""
     import time
 
     from pyspark.sql import functions as F
@@ -137,8 +164,12 @@ def build_corpus(spark, docs, min_tokens: int = 20, near_dup_matches: int = 6,
     from go_scrapper_spark.functions import textstats
     from go_scrapper_spark.operators import dedupe
 
+    if existing is None and existing_sigs is not None:
+        raise ValueError("existing_sigs needs the standing corpus (existing)")
     docs = docs.persist()
     counts = {"input": docs.count()}
+    if verbose_counts and existing is not None:
+        counts["existing"] = existing.count()
     secs: dict = {}
     counts["stage_secs"] = secs
 
@@ -161,17 +192,45 @@ def build_corpus(spark, docs, min_tokens: int = 20, near_dup_matches: int = 6,
     docs.unpersist()
     t0 = time.time()
 
-    # exact dedup: canonical doc per content hash
-    canon = dedupe.exact_dedup_groups(kept).select(
+    # exact dedup: canonical doc per content hash (incremental: after
+    # dropping the content hashes the standing corpus already holds)
+    fresh = kept
+    if existing is not None:
+        h = lambda c: F.md5(F.col(c).cast("binary"))  # noqa: E731
+        fresh = kept.join(
+            existing.select(h("text").alias("_h")).distinct(),
+            h("text") == F.col("_h"), "left_anti",
+        )
+    canon = dedupe.exact_dedup_groups(fresh).select(
         F.col("canonical_id").alias("doc_id")
     )
     deduped = dedupe.local_checkpoint_no_stats(
-        kept.join(canon, "doc_id", "left_semi"))
+        fresh.join(canon, "doc_id", "left_semi"))
     if verbose_counts:
         counts["after_exact_dedup"] = deduped.count()
     secs["exact_dedup"] = round(time.time() - t0, 2)
     dedupe.free_local_checkpoint(kept)
     t0 = time.time()
+
+    if existing is not None:
+        # near-dup vs the standing corpus, which always wins. The
+        # anti-join is checkpointed so the cross band join runs once,
+        # not again under each later read; the signature tables it
+        # persisted are then dead (released as below)
+        cross = dedupe.minhash_lsh_pairs_cross(
+            deduped,
+            existing_docs=None if existing_sigs is not None else existing,
+            existing_sigs=existing_sigs,
+        ).filter(F.col("sig_matches") >= near_dup_matches)
+        pre = deduped
+        deduped = dedupe.local_checkpoint_no_stats(deduped.join(
+            cross.select(F.col("doc_new").alias("doc_id")).distinct(),
+            "doc_id", "left_anti",
+        ))
+        dedupe.minhash_signatures(pre).unpersist()
+        if existing_sigs is None:
+            dedupe.minhash_signatures(existing).unpersist()
+        dedupe.free_local_checkpoint(pre)
 
     # near-dup prune: strong candidate pairs → connected components →
     # keep exactly one doc (the min id) per TRANSITIVE cluster. A pure
@@ -208,6 +267,10 @@ def build_corpus(spark, docs, min_tokens: int = 20, near_dup_matches: int = 6,
     if verbose_counts:
         counts["after_near_dup"] = survivors.count()
     edges.unpersist()
+    # minhash_lsh_pairs persisted deduped's signature table; a rebuilt
+    # minhash_signatures(deduped) names it (DataFrame.unpersist finds
+    # the cached plan by sameResult)
+    dedupe.minhash_signatures(deduped).unpersist()
     secs["near_dup"] = round(time.time() - t0, 2)
     dedupe.free_local_checkpoint(deduped)
 
@@ -245,122 +308,7 @@ def build_corpus(spark, docs, min_tokens: int = 20, near_dup_matches: int = 6,
 
     lang = textstats.lang_id(survivors).select("doc_id", "lang_guess")
     result = survivors.join(lang, "doc_id")
-    return result, counts
-
-
-def update_corpus(spark, existing, new_docs, min_tokens: int = 20,
-                  near_dup_matches: int = 6, eval_df=None,
-                  decontam_n: int = 8, existing_sigs=None,
-                  decontam_broadcast: bool = True,
-                  verbose_counts: bool = False):
-    """Incremental corpus maintenance: clean a NEW crawl segment and
-    dedup it against the STANDING corpus without re-processing the
-    corpus itself — the nightly operation of a continuously-crawling
-    pipeline. Returns (appendable_df, counts): the rows to append
-    (same schema as build_corpus output; ``existing`` is never
-    modified).
-
-    Incremental semantics (documented, deliberately corpus-stable —
-    NOT identical to a full rebuild): the standing corpus always wins.
-    A new doc is dropped when it
-      - fails the quality gate,
-      - exactly matches any standing doc's content hash (or a
-        same-batch doc with a smaller id),
-      - near-dups any standing doc (cross LSH ≥ near_dup_matches) or
-        transitively clusters with same-batch docs (keep min id),
-      - shares an n-gram with the eval set (when eval_df is given).
-
-    Scale shape: the standing corpus contributes ONE content-hash
-    anti-join plus the cross band join; pass ``existing_sigs`` (a
-    stored ``minhash_signatures`` parquet, ``--sigs`` in the CLI) and
-    the 10^9-doc side is never re-shingled — the production nightly
-    mode. Every quadratic-risk stage touches only the new segment.
-    ``verbose_counts`` gates the standing-corpus row count (a FULL
-    scan of 10^9 docs just to fill a log dict — off by default,
-    round 6)."""
-    from pyspark.sql import functions as F
-
-    from go_scrapper_spark.functions import textstats
-    from go_scrapper_spark.operators import dedupe
-
-    counts = {"new": new_docs.count()}
-    if verbose_counts:
-        counts["existing"] = existing.count()
-
-    quality = textstats.text_quality(new_docs, text_col="text").filter(
-        (F.col("quality_band") == "keep") & (F.col("n_tokens") >= min_tokens)
-    )
-    # checkpoint between stages, not chained persists — bounds the
-    # plan every later action re-analyzes (see build_corpus)
-    kept = dedupe.local_checkpoint_no_stats(
-        new_docs.join(quality.select("doc_id"), "doc_id", "left_semi"))
-    counts["after_quality"] = kept.count()
-
-    # exact: drop content hashes the corpus already holds, then keep
-    # one (min id) per remaining hash within the batch
-    h = lambda c: F.md5(F.col(c).cast("binary"))  # noqa: E731
-    fresh = kept.join(
-        existing.select(h("text").alias("_h")).distinct(),
-        h("text") == F.col("_h"), "left_anti",
-    )
-    canon = dedupe.exact_dedup_groups(fresh).select(
-        F.col("canonical_id").alias("doc_id")
-    )
-    deduped = dedupe.local_checkpoint_no_stats(
-        fresh.join(canon, "doc_id", "left_semi"))
-    counts["after_exact_dedup"] = deduped.count()
-    dedupe.free_local_checkpoint(kept)
-
-    # near-dup vs the standing corpus: existing always wins
-    cross = dedupe.minhash_lsh_pairs_cross(
-        deduped,
-        existing_docs=None if existing_sigs is not None else existing,
-        existing_sigs=existing_sigs,
-    ).filter(
-        F.col("sig_matches") >= near_dup_matches
-    )
-    survivors = deduped.join(
-        cross.select(F.col("doc_new").alias("doc_id")).distinct(),
-        "doc_id", "left_anti",
-    )
-    # near-dup within the batch: transitive clusters keep min id.
-    # Component labeling runs over edge ENDPOINTS only (same shape as
-    # build_corpus): a doc in no near-dup pair can never lose.
-    pairs = dedupe.minhash_lsh_pairs(survivors).filter(
-        F.col("sig_matches") >= near_dup_matches
-    )
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).persist()
-    endpoints = (
-        edges.select(F.col("src").alias("doc"))
-        .unionByName(edges.select(F.col("dst").alias("doc")))
-        .distinct()
-    )
-    clusters = dedupe.connected_components(endpoints, edges)
-    losers = clusters.filter(F.col("doc") != F.col("cluster_id")).select(
-        F.col("doc").alias("doc_id")
-    )
-    survivors = dedupe.local_checkpoint_no_stats(survivors.join(
-        losers.hint("shuffle_hash"), "doc_id", "left_anti"
-    ))
-    dedupe.free_local_checkpoint(clusters)
-    counts["after_near_dup"] = survivors.count()
-    edges.unpersist()
-    dedupe.free_local_checkpoint(deduped)
-
-    if eval_df is not None:
-        from go_scrapper_spark.operators.decontam import decontaminate
-
-        pre = survivors
-        survivors = dedupe.local_checkpoint_no_stats(decontaminate(
-            survivors, eval_df, n=decontam_n,
-            broadcast_eval=decontam_broadcast))
-        counts["after_decontam"] = survivors.count()
-        dedupe.free_local_checkpoint(pre)
-
-    lang = textstats.lang_id(survivors).select("doc_id", "lang_guess")
-    result = survivors.join(lang, "doc_id")
+    result._ckpt_origin = getattr(survivors, "_ckpt_origin", survivors)
     return result, counts
 
 
@@ -381,9 +329,9 @@ def main() -> None:
                     help="k>0 adds substring-level exact dedup (Lee et "
                          "al. ExactSubstr at word granularity) after "
                          "doc-level dedup: k-token spans repeated "
-                         "anywhere keep only their first occurrence. "
-                         "Batch mode only — ignored (with a warning) "
-                         "under --update-existing")
+                         "anywhere keep only their first occurrence "
+                         "(under --update-existing: within the new "
+                         "segment)")
     ap.add_argument("--host-template-den", type=int, default=0,
                     help="with --warc: drop paragraphs appearing in "
                          ">= 1/DEN of a host's documents (0 = off)")
@@ -407,10 +355,12 @@ def main() -> None:
                          "instead of a broadcast (eval suites too "
                          "large to broadcast)")
     ap.add_argument("--verbose-counts", action="store_true",
-                    help="incremental mode: also count the standing "
-                         "corpus (a full extra scan — diagnostics "
-                         "only)")
+                    help="also count the rows after each stage, and "
+                         "in incremental mode the standing corpus (a "
+                         "full extra scan) — diagnostics only")
     args = ap.parse_args()
+    if args.sigs and not args.update_existing:
+        ap.error("--sigs needs --update-existing")
 
     from go_scrapper_spark.session import get_spark
 
@@ -422,33 +372,16 @@ def main() -> None:
         docs = spark.read.parquet(args.docs)
     eval_df = (spark.read.parquet(args.decontam_eval)
                if args.decontam_eval else None)
-    if args.update_existing:
-        if args.substring_k > 0:
-            # ADVICE r6: update_corpus has no substring stage — say so
-            # loudly instead of silently skipping span dedup
-            print(
-                "WARNING: --substring-k is not implemented in "
-                "incremental (--update-existing) mode; the delta is "
-                "written WITHOUT substring-level dedup",
-                file=sys.stderr,
-            )
-        existing = spark.read.parquet(args.update_existing)
-        result, counts = update_corpus(
-            spark, existing, docs, args.min_tokens, args.near_dup_matches,
-            eval_df=eval_df, decontam_n=args.decontam_ngram,
-            existing_sigs=(spark.read.parquet(args.sigs)
-                           if args.sigs else None),
-            decontam_broadcast=not args.decontam_shuffle,
-            verbose_counts=args.verbose_counts,
-        )
-    else:
-        result, counts = build_corpus(
-            spark, docs, args.min_tokens, args.near_dup_matches,
-            eval_df=eval_df, decontam_n=args.decontam_ngram,
-            substring_k=args.substring_k,
-            decontam_broadcast=not args.decontam_shuffle,
-            verbose_counts=args.verbose_counts,
-        )
+    result, counts = build_corpus(
+        spark, docs, args.min_tokens, args.near_dup_matches,
+        eval_df=eval_df, decontam_n=args.decontam_ngram,
+        substring_k=args.substring_k,
+        decontam_broadcast=not args.decontam_shuffle,
+        verbose_counts=args.verbose_counts,
+        existing=(spark.read.parquet(args.update_existing)
+                  if args.update_existing else None),
+        existing_sigs=spark.read.parquet(args.sigs) if args.sigs else None,
+    )
     n_final = result.count()
     result.write.mode("overwrite").partitionBy("lang_guess").parquet(args.out)
     # a fully-filtered corpus is a legitimate outcome: an empty

@@ -10,7 +10,9 @@ import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo/jobs")
+import corpus  # noqa: E402
 from corpus import build_corpus  # noqa: E402
+from go_scrapper_spark.operators import dedupe  # noqa: E402
 
 DOCS = "/root/testdata/sf0.001/documents.parquet"
 
@@ -69,9 +71,7 @@ def test_decontam_stage_drops_eval_overlap(spark):
                    if d in {r["doc_id"] for r in base.select("doc_id").collect()})
 
 
-def test_update_corpus_incremental_semantics(spark):
-    from corpus import update_corpus
-
+def test_incremental_semantics(spark):
     docs = spark.read.parquet(DOCS)
     base, _ = build_corpus(spark, docs.filter(F.col("doc_id") < 60),
                            min_tokens=5, near_dup_matches=6)
@@ -87,8 +87,9 @@ def test_update_corpus_incremental_semantics(spark):
     fresh = docs.filter((F.col("doc_id") >= 60) & (F.col("doc_id") < 90))
     segment = copies.unionByName(fresh)
 
-    delta, counts = update_corpus(spark, existing, segment,
-                                  min_tokens=5, near_dup_matches=6)
+    delta, counts = build_corpus(spark, segment, min_tokens=5,
+                                 near_dup_matches=6, existing=existing,
+                                 verbose_counts=True)
     out = delta.persist()
     delta_ids = {r["doc_id"] for r in out.select("doc_id").collect()}
     # every exact copy of a standing doc is gone
@@ -102,9 +103,7 @@ def test_update_corpus_incremental_semantics(spark):
     assert "lang_guess" in out.columns and len(delta_ids) > 0
 
 
-def test_update_corpus_drops_near_dups_of_existing(spark):
-    from corpus import update_corpus
-
+def test_incremental_drops_near_dups_of_existing(spark):
     base_rows = [(i, f"the standing corpus document number {i} talks about "
                      f"topic {i} in enough detail to pass every filter with "
                      f"plenty of ordinary words here")
@@ -119,14 +118,14 @@ def test_update_corpus_drops_near_dups_of_existing(spark):
               "in the collection at all for any reader"),
     ]
     segment = spark.createDataFrame(seg_rows, "doc_id long, text string")
-    delta, counts = update_corpus(spark, existing, segment,
-                                  min_tokens=5, near_dup_matches=4)
+    delta, counts = build_corpus(spark, segment, min_tokens=5,
+                                 near_dup_matches=4, existing=existing)
     ids = {r["doc_id"] for r in delta.select("doc_id").collect()}
     assert ids == {901}  # near-dup dropped (4/6 sig match), fresh kept
     # default counts never scan the standing corpus (verbose only)
     assert "existing" not in counts
-    _, vc = update_corpus(spark, existing, segment, min_tokens=5,
-                          near_dup_matches=4, verbose_counts=True)
+    _, vc = build_corpus(spark, segment, min_tokens=5, near_dup_matches=4,
+                         existing=existing, verbose_counts=True)
     assert vc["existing"] == 5
 
 
@@ -158,9 +157,7 @@ def test_cross_lsh_sigs_path_equals_docs_path(spark):
                                        existing_sigs=sigs)
 
 
-def test_update_corpus_with_stored_sigs_matches_raw(spark):
-    from corpus import update_corpus
-
+def test_incremental_with_stored_sigs_matches_raw(spark):
     docs = spark.read.parquet(DOCS)
     existing = docs.filter(F.col("doc_id") < 50).select("doc_id", "text")
     segment = docs.filter(
@@ -169,19 +166,22 @@ def test_update_corpus_with_stored_sigs_matches_raw(spark):
 
     from go_scrapper_spark.operators.dedupe import minhash_signatures
     sigs = minhash_signatures(existing)
-    raw, _ = update_corpus(spark, existing, segment,
-                           min_tokens=5, near_dup_matches=6)
-    via, _ = update_corpus(spark, existing, segment, min_tokens=5,
-                           near_dup_matches=6, existing_sigs=sigs)
+    raw, _ = build_corpus(spark, segment, min_tokens=5,
+                          near_dup_matches=6, existing=existing)
+    via, _ = build_corpus(spark, segment, min_tokens=5, near_dup_matches=6,
+                          existing=existing, existing_sigs=sigs)
     assert ({r["doc_id"] for r in raw.select("doc_id").collect()}
             == {r["doc_id"] for r in via.select("doc_id").collect()})
 
 
-def test_substring_k_stage_strips_planted_spans(spark):
+@pytest.mark.parametrize("mode", ["batch", "incremental"])
+def test_substring_k_stage_strips_planted_spans(spark, mode):
     """build_corpus(substring_k=K): a K-token span planted across docs
     keeps exactly one copy (the (doc_id, pos)-first), the stage count
     lands in counts/stage_secs, and a doc that is entirely the span
-    drops from the corpus."""
+    drops from the corpus. In incremental mode (the same docs as the
+    segment, an unrelated one-doc standing corpus) the stage works
+    within the segment."""
     # every doc needs >= 20 tokens and >= 2% function words to clear
     # the quality keep-band; the span carries its own stopwords so the
     # span-only doc reaches the substring stage and empties THERE
@@ -195,8 +195,13 @@ def test_substring_k_stage_strips_planted_spans(spark):
         (4, "an independent document with enough tokens and function "
             "words to pass the quality gate easily on its own good merits"),
     ], "doc_id long, text string")
+    existing = None if mode == "batch" else spark.createDataFrame(
+        [(100, "a standing corpus page about gardening tools and how "
+               "to keep them sharp through the long winter months")],
+        "doc_id long, text string")
     result, counts = build_corpus(spark, docs, min_tokens=5, verbose_counts=True,
-                                  near_dup_matches=6, substring_k=6)
+                                  near_dup_matches=6, substring_k=6,
+                                  existing=existing)
     rows = {r["doc_id"]: r["text"] for r in result.collect()}
     assert counts["after_substring_dedup"] < counts["after_near_dup"]
     assert "substring_dedup" in counts["stage_secs"]
@@ -204,3 +209,74 @@ def test_substring_k_stage_strips_planted_spans(spark):
     assert span not in rows[2] and "very different words" in rows[2]
     assert 3 not in rows              # span-only doc empties and drops
     assert rows[4].startswith("an independent")
+
+
+@pytest.mark.parametrize("mode", ["batch", "incremental"])
+def test_build_corpus_releases_its_caches(spark, mode):
+    """Freeing each result releases its survivors checkpoint, and the
+    near-dup stage releases the signature tables the LSH operators
+    persisted: repeated calls leave no persisted RDD behind."""
+    jsc = spark.sparkContext._jsc
+    docs = spark.read.parquet(DOCS).select("doc_id", "text")
+    existing = None
+    segment = docs.filter(F.col("doc_id") < 30)
+    if mode == "incremental":
+        existing = docs.filter(F.col("doc_id") < 50)
+        segment = docs.filter(
+            (F.col("doc_id") >= 40) & (F.col("doc_id") < 70)
+        ).select((F.col("doc_id") + 1000).alias("doc_id"), "text")
+    before = set(jsc.getPersistentRDDs().keySet())
+    for _ in range(2):
+        result, _ = build_corpus(spark, segment, min_tokens=5,
+                                 existing=existing)
+        assert result.count() > 0
+        dedupe.free_local_checkpoint(result)
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+
+
+def test_incremental_reads_standing_sigs_once(spark):
+    """One incremental call runs the cross-corpus band join once. That
+    plan scans existing_sigs twice (band join and match join), and the
+    tap's Python UDF is evaluated twice per scan, so a single pass reads
+    it 4x its row count; a lazy cross anti-join re-runs under each
+    later read."""
+    docs = spark.read.parquet(DOCS)
+    existing = docs.filter(F.col("doc_id") < 50).select("doc_id", "text")
+    sigs = dedupe.minhash_signatures(existing)
+    sigs = spark.createDataFrame(sigs.collect(), sigs.schema)
+    n = sigs.count()
+    reads = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def tap(d):
+        reads.add(1)
+        return d
+
+    segment = docs.filter(
+        (F.col("doc_id") >= 40) & (F.col("doc_id") < 70)
+    ).select((F.col("doc_id") + 5000).alias("doc_id"), "text")
+    result, _ = build_corpus(spark, segment, min_tokens=5, existing=existing,
+                             existing_sigs=sigs.withColumn("doc", tap("doc")))
+    assert result.count() > 0
+    dedupe.free_local_checkpoint(result)
+    assert n == 50 and 0 < reads.value <= 4 * n
+
+
+def test_cli_rejects_sigs_without_update_existing(monkeypatch, capsys):
+    """--sigs only means something against a standing corpus: argparse
+    rejects it before any Spark session starts, and build_corpus
+    rejects existing_sigs without existing before it reads anything."""
+    import go_scrapper_spark.session as session
+
+    def no_spark(**_kw):
+        raise AssertionError("Spark started before the argument check")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    monkeypatch.setattr(sys, "argv", [
+        "corpus", "--docs", "d.parquet", "--out", "o", "--sigs", "s"])
+    with pytest.raises(SystemExit) as exc:
+        corpus.main()
+    assert exc.value.code == 2
+    assert "--update-existing" in capsys.readouterr().err
+    with pytest.raises(ValueError):
+        build_corpus(None, None, existing_sigs=object())
