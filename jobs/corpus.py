@@ -19,11 +19,14 @@ Common-Crawl access pattern — and runs two extra front stages:
 
 0a. archive parse   — sources/warc.py parse_warc → 200-response pages
 0b. main content    — functions/boilerplate.py extract_main_content
-                      (block + link-density boilerplate strip), then
-                      paragraph-level exact dedup
-                      (dedupe.paragraph_dedup, CCNet line-dedup) —
-                      doc_id = xxhash64(url) (content-addressed,
-                      partition-independent)
+                      (block + link-density boilerplate strip),
+                      checkpointed once so every later stage reads
+                      each parsed record once (the CLI frees it once
+                      build_corpus has read it), then the optional
+                      per-host template strip and paragraph-level
+                      exact dedup (dedupe.paragraph_dedup, CCNet
+                      line-dedup) — doc_id = xxhash64(url)
+                      (content-addressed, partition-independent)
 
 ``--wet-out`` additionally ships the final per-language corpus as WET
 files (WARC conversion records, pages_to_wet) — the interchange shape
@@ -68,11 +71,22 @@ def warc_front_end(files_df, host_template_den: int = 0):
     paragraph in ≥ 1/den of a host's docs — runs BEFORE the global
     paragraph dedup, the production ordering), then paragraph-dedup
     across the batch. doc_id is xxhash64(url) — deterministic under
-    any partitioning, no global row numbering."""
+    any partitioning, no global row numbering.
+
+    The parsed, boilerplate-stripped documents are checkpointed once,
+    eagerly, and every later stage reads that checkpoint: host
+    template strip, paragraph dedup and the doc_id join-backs read
+    them under different exchanges, and a lazy frame re-ran the WARC
+    parse and the boilerplate scoring under each (3 reads of every
+    file, 6 with the host strip). The returned frame is lazy over the
+    checkpoint and carries it as ``_ckpt_origin``: once the frame's
+    consumer has read it (``build_corpus`` reads its input once),
+    ``dedupe.free_local_checkpoint(docs)`` releases it."""
     from pyspark.sql import functions as F
 
     from go_scrapper_spark.functions.boilerplate import extract_main_content
     from go_scrapper_spark.operators.dedupe import (host_template_strip,
+                                                    local_checkpoint_no_stats,
                                                     paragraph_dedup)
     from go_scrapper_spark.sources.warc import warc_to_pages
 
@@ -83,7 +97,7 @@ def warc_front_end(files_df, host_template_den: int = 0):
     # (~295 s vs 59 s for this shape; BASELINE.md round 7)
     main = extract_main_content(pages, id_col="url",
                                 carry_cols=("warc_ts",))
-    docs = (
+    docs = local_checkpoint_no_stats(
         main.filter(F.col("n_good") > 0)
         .select(
             # full 64-bit content-addressed id (r6: the previous
@@ -94,6 +108,7 @@ def warc_front_end(files_df, host_template_den: int = 0):
             F.col("main_text").alias("text"), "url", "warc_ts",
         )
     )
+    ckpt = getattr(docs, "_ckpt_origin", docs)
     if host_template_den > 0:
         hosted = docs.withColumn(
             "host", F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1)
@@ -108,11 +123,13 @@ def warc_front_end(files_df, host_template_den: int = 0):
                     "url", "warc_ts")
         )
     cleaned = paragraph_dedup(docs, sep="\n")
-    return (
+    out = (
         docs.select("doc_id", "url", "warc_ts")
         .join(cleaned, "doc_id")
         .select("doc_id", F.col("clean_text").alias("text"), "url", "warc_ts")
     )
+    out._ckpt_origin = ckpt
+    return out
 
 
 def build_corpus(spark, docs, min_tokens: int = 20, near_dup_matches: int = 6,
@@ -151,7 +168,10 @@ def build_corpus(spark, docs, min_tokens: int = 20, near_dup_matches: int = 6,
     ``minhash_signatures`` table, ``--sigs`` in the CLI) and the
     10^9-doc side is never re-shingled — the production nightly mode;
     the standing corpus then contributes one content-hash anti-join
-    and the cross band join, materialized once. ``verbose_counts``
+    and the cross band join, materialized once. The segment is
+    shingled once: the in-segment pairs are those of the cross band
+    join's cached signature table with both ends surviving the cross
+    prune. ``verbose_counts``
     also counts the standing corpus (``counts["existing"]``, a full
     scan).
 
@@ -212,34 +232,46 @@ def build_corpus(spark, docs, min_tokens: int = 20, near_dup_matches: int = 6,
     dedupe.free_local_checkpoint(kept)
     t0 = time.time()
 
+    # the frame whose signature table the LSH operators persist
+    shingled = deduped
     if existing is not None:
         # near-dup vs the standing corpus, which always wins. The
         # anti-join is checkpointed so the cross band join runs once,
-        # not again under each later read; the signature tables it
-        # persisted are then dead (released as below)
+        # not again under each later read; the standing signature
+        # table it persisted is then dead
         cross = dedupe.minhash_lsh_pairs_cross(
             deduped,
             existing_docs=None if existing_sigs is not None else existing,
             existing_sigs=existing_sigs,
         ).filter(F.col("sig_matches") >= near_dup_matches)
-        pre = deduped
-        deduped = dedupe.local_checkpoint_no_stats(deduped.join(
+        deduped = dedupe.local_checkpoint_no_stats(shingled.join(
             cross.select(F.col("doc_new").alias("doc_id")).distinct(),
             "doc_id", "left_anti",
         ))
-        dedupe.minhash_signatures(pre).unpersist()
         if existing_sigs is None:
             dedupe.minhash_signatures(existing).unpersist()
-        dedupe.free_local_checkpoint(pre)
 
     # near-dup prune: strong candidate pairs → connected components →
     # keep exactly one doc (the min id) per TRANSITIVE cluster. A pure
     # pairwise drop-the-higher-id rule over-keeps on chains discovered
     # through a middle document (pairs (a,c),(b,c) with no (a,b) would
     # keep both a and b); component labeling closes the transitivity.
-    pairs = dedupe.minhash_lsh_pairs(deduped).filter(
+    pairs = dedupe.minhash_lsh_pairs(shingled).filter(
         F.col("sig_matches") >= near_dup_matches
     )
+    if shingled is not deduped:
+        # a doc's signature does not depend on the other docs, so the
+        # pairs among the cross-pruned docs are the pre-prune pairs with
+        # both ends kept: the segment is shingled once, its signature
+        # persist hitting the table the cross band join cached
+        kept_ids = deduped.select("doc_id")
+        pairs = pairs.join(
+            kept_ids.withColumnRenamed("doc_id", "doc_a"), "doc_a",
+            "left_semi",
+        ).join(
+            kept_ids.withColumnRenamed("doc_id", "doc_b"), "doc_b",
+            "left_semi",
+        )
     # persist: the LSH candidate join feeds BOTH the endpoint vertex
     # set and the component loop's symmetrized edge checkpoint
     edges = pairs.select(
@@ -267,12 +299,14 @@ def build_corpus(spark, docs, min_tokens: int = 20, near_dup_matches: int = 6,
     if verbose_counts:
         counts["after_near_dup"] = survivors.count()
     edges.unpersist()
-    # minhash_lsh_pairs persisted deduped's signature table; a rebuilt
-    # minhash_signatures(deduped) names it (DataFrame.unpersist finds
+    # the LSH operators persisted shingled's signature table; a rebuilt
+    # minhash_signatures(shingled) names it (DataFrame.unpersist finds
     # the cached plan by sameResult)
-    dedupe.minhash_signatures(deduped).unpersist()
+    dedupe.minhash_signatures(shingled).unpersist()
     secs["near_dup"] = round(time.time() - t0, 2)
     dedupe.free_local_checkpoint(deduped)
+    if shingled is not deduped:
+        dedupe.free_local_checkpoint(shingled)
 
     if eval_df is not None:
         # eval-set decontamination (operators/decontam.py): drop any
@@ -382,6 +416,12 @@ def main() -> None:
                   if args.update_existing else None),
         existing_sigs=spark.read.parquet(args.sigs) if args.sigs else None,
     )
+    if args.warc:
+        # build_corpus has read the front end's documents checkpoint
+        # into its own; nothing reads it any more
+        from go_scrapper_spark.operators.dedupe import free_local_checkpoint
+
+        free_local_checkpoint(docs)
     n_final = result.count()
     result.write.mode("overwrite").partitionBy("lang_guess").parquet(args.out)
     # a fully-filtered corpus is a legitimate outcome: an empty

@@ -4,12 +4,14 @@ must be monotone non-increasing, survivors contain no exact dups, and
 the output is partitioned by lang_guess."""
 
 import glob
+import os
 import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo/jobs")
+sys.path.insert(0, os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"))
 import corpus  # noqa: E402
 from corpus import build_corpus  # noqa: E402
 from go_scrapper_spark.operators import dedupe  # noqa: E402
@@ -260,6 +262,39 @@ def test_incremental_reads_standing_sigs_once(spark):
     assert result.count() > 0
     dedupe.free_local_checkpoint(result)
     assert n == 50 and 0 < reads.value <= 4 * n
+
+
+def test_incremental_shingles_segment_once(spark, monkeypatch):
+    """One incremental call shingles the exact-deduped segment once.
+    The cross band join persists its signature table, and the
+    within-segment pairs are that set's pairs with both ends kept by
+    the cross prune, so their signature persist hits the cached table
+    instead of shingling the pruned subset again."""
+    docs = spark.read.parquet(DOCS)
+    existing = docs.filter(F.col("doc_id") < 50).select("doc_id", "text")
+    sigs = dedupe.minhash_signatures(existing)
+    sigs = spark.createDataFrame(sigs.collect(), sigs.schema)
+    reads = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def tap(text):
+        reads.add(1)
+        return text
+
+    signatures = dedupe.minhash_signatures
+    monkeypatch.setattr(
+        dedupe, "minhash_signatures",
+        lambda d, *a, **kw: signatures(d.withColumn("text", tap("text")),
+                                       *a, **kw))
+    segment = docs.filter(
+        (F.col("doc_id") >= 40) & (F.col("doc_id") < 70)
+    ).select((F.col("doc_id") + 5000).alias("doc_id"), "text")
+    result, counts = build_corpus(spark, segment, min_tokens=5,
+                                  existing=existing, existing_sigs=sigs,
+                                  verbose_counts=True)
+    assert result.count() > 0
+    dedupe.free_local_checkpoint(result)
+    assert reads.value == counts["after_exact_dedup"] > 0
 
 
 def test_cli_rejects_sigs_without_update_existing(monkeypatch, capsys):

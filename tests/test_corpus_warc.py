@@ -3,14 +3,17 @@ warc_front_end) and the WET export leg: raw archives → boilerplate
 strip → paragraph dedup → documents shape → (via build_corpus)
 training corpus → WET interchange files and back."""
 
+import os
 import sys
 
 import pytest
 from pyspark.sql import functions as F
 
+from go_scrapper_spark.operators import dedupe
 from go_scrapper_spark.sources import warc as w
 
-sys.path.insert(0, "/root/repo/jobs")
+sys.path.insert(0, os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"))
 from corpus import build_corpus, warc_front_end  # noqa: E402
 
 BOILER_NAV = ('<nav><a href="/">home</a> <a href="/a">section one</a>'
@@ -94,3 +97,41 @@ def test_front_end_host_template_mode_removes_banner_entirely(spark,
     # every page of every host) vanishes entirely — no canonical copy
     assert sum(t.count(BANNER) for t in texts) == 0
     assert all("Document" in t for t in texts)  # unique prose intact
+
+
+@pytest.mark.parametrize("den", [0, 2])
+def test_front_end_parses_each_file_once(spark, warc_files, den):
+    """Front end plus build_corpus parse every WARC file once: the
+    parsed, boilerplate-stripped documents are checkpointed, so the
+    host template strip, paragraph dedup and join-backs read the
+    checkpoint. A lazy front end re-ran the parse under each of their
+    exchanges: 3 reads of each file, more with the host strip."""
+    reads = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def tap(file_id):
+        reads.add(1)
+        return file_id
+
+    docs = warc_front_end(warc_files.withColumn("file_id", tap("file_id")),
+                          host_template_den=den)
+    result, _ = build_corpus(spark, docs, min_tokens=5)
+    assert result.count() > 0
+    dedupe.free_local_checkpoint(result)
+    dedupe.free_local_checkpoint(docs)
+    assert reads.value == warc_files.count()
+
+
+def test_front_end_releases_its_checkpoint(spark, warc_files):
+    """Freeing the front end's frame once build_corpus has read it, and
+    then the result, leaves no persisted RDD behind."""
+    jsc = spark.sparkContext._jsc
+    warc_files.count()
+    before = set(jsc.getPersistentRDDs().keySet())
+    for _ in range(2):
+        docs = warc_front_end(warc_files, host_template_den=2)
+        result, _ = build_corpus(spark, docs, min_tokens=5)
+        dedupe.free_local_checkpoint(docs)
+        assert result.count() > 0
+        dedupe.free_local_checkpoint(result)
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()

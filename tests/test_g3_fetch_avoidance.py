@@ -6,6 +6,7 @@ order (main.go:950-960). The Spark engine must match the pure-Python
 model's exact fetch log, fetch strictly fewer pages than a full crawl,
 and produce exactly the full crawl's truncated output."""
 
+import os
 import shutil
 import tempfile
 
@@ -19,6 +20,8 @@ from go_scrapper_spark.plans.reference_model import ModelCrawl
 from go_scrapper_spark.plans.search import resolve_profile_keys
 from go_scrapper_spark.sources import synthetic_web as sw
 from go_scrapper_spark.sources.storage import SnapshotStore
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # large enough review counts that probe windows actually widen:
 # biz0 rc=247 (feed windows 0..4), nc=131 (non-rec windows 0..2)
@@ -244,13 +247,11 @@ def test_cli_incremental_truncates_jsonl(tmp_path):
         }
         payload = base64.standard_b64encode(json.dumps([task]).encode()).decode()
         out = str(tmp_path / tag)
-        import os
-
-        env = dict(os.environ, PYTHONPATH="/root/repo")
+        env = dict(os.environ, PYTHONPATH=ROOT)
         subprocess.run(
             [sys.executable, "jobs/crawl.py", "-a", payload, "-o", out,
              "--n-biz", "3"],
-            check=True, cwd="/root/repo", capture_output=True, timeout=600,
+            check=True, cwd=ROOT, capture_output=True, timeout=600,
             env=env,
         )
         import glob
