@@ -10,7 +10,7 @@ pipeline operators (dedup, similarity search, text analysis) a
 Layout
 ------
 - ``session``    : tuned SparkSession factory (AQE, Arrow, shuffle sizing)
-- ``schemas``    : every StructType contract (SURVEY.md §1)
+- ``schemas``    : input and driver-built state StructTypes (SURVEY.md §1)
 - ``functions/`` : scalar/vectorized primitives (URL canon, Go-JSON hash,
                    HTML/JSON extraction, text stats)
 - ``sources/``   : synthetic web generator, snapshot storage, table loaders

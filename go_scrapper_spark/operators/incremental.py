@@ -9,10 +9,10 @@ whose hash is in the seen set, keep strictly earlier rows.
 
 The reference then keeps widening pagination windows by 50 until the
 hash is found (G3, main.go:603-654) — a fetch-avoidance optimization
-of the same semantics; the engine's scheduler analogue is planned as a
-per-task early-exit predicate on wave selection (see ROADMAP in
-README). The truncation operator below is the semantics contract both
-share.
+of the same semantics; the engine's scheduler analogue is the probe
+window admission in plans/crawl.py. The truncation operator below is
+the semantics contract both share, applied once to the whole result
+by ``CrawlEngine.final_extracted``.
 """
 
 from __future__ import annotations
@@ -62,32 +62,4 @@ def truncate_per_task(
         marked.withColumn("_cut", cut)
         .filter(F.col("_cut").isNull() | (F.col("_rn") < F.col("_cut")))
         .drop("_tk", "_hit_flag", "_rn", "_cut")
-    )
-
-
-def truncate_at_seen_hash(
-    extracted: DataFrame,
-    last_hashes: list[str],
-    partition_col: str | None = None,
-) -> DataFrame:
-    """Drop the first seen-hash row and everything after it in output
-    order. ``partition_col`` scopes the cut per task/business (the
-    reference is single-task; multi-task crawls cut independently)."""
-    if not last_hashes:
-        return extracted
-    w = Window.partitionBy(partition_col) if partition_col else Window.partitionBy()
-    w = w.orderBy(*order_cols())
-    hashes = F.array(*[F.lit(h) for h in last_hashes])
-    rn = F.row_number().over(w)
-    with_rn = extracted.withColumn("_rn", rn).withColumn(
-        "_hit", F.array_contains(hashes, F.col("review_hash"))
-    )
-    wcut = (
-        Window.partitionBy(partition_col) if partition_col else Window.partitionBy()
-    )
-    cut = F.min(F.when(F.col("_hit"), F.col("_rn"))).over(wcut)
-    return (
-        with_rn.withColumn("_cut", cut)
-        .filter(F.col("_cut").isNull() | (F.col("_rn") < F.col("_cut")))
-        .drop("_rn", "_hit", "_cut")
     )

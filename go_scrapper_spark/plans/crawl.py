@@ -9,8 +9,9 @@ Each superstep (wave) is one declarative Spark plan:
       → vectorized extraction, one html read per page (P-series, §2.10)
       → review finishing (hash P18 already applied; b64 P12 JVM-side)
       → outlink candidates: robots filter (S9/J5) → in-wave dedup (U2)
-        → anti-join vs frontier/seen (J3)
-      → frontier merge + seen/extracted/metrics deltas
+        → anti-join vs the frontier, the exact URL-seen set (J3)
+      → frontier merge + fetch_log/extracted/pagetext/pagemeta/metrics
+        deltas
       → snapshot commit (atomic; resume-idempotent via wave_id stamps)
 
 The loop itself is plain driver Python — deterministic and resumable
@@ -19,10 +20,10 @@ local checkpoint kept in memory for the next wave (lineage truncated,
 no iterative-plan blowup); every snapshot also holds it, with the rest
 of the full state, for a fresh engine to load.
 
-Scale design (10^10 frontier): frontier/seen bucketed by host/url hash
-(Iceberg ``bucket()``), wave selection windows align with that
-bucketing, the robots/budget joins broadcast, the fetch join is
-storage-partitioned on url bucket, AQE handles residual skew. The
+Scale design (10^10 frontier): the frontier is partitioned by host
+(Iceberg ``bucket(P, host)``), the key wave selection windows over;
+the robots/budget joins broadcast, the fetch join is
+storage-partitioned on url, AQE handles residual skew. The
 frontier merge here is a full rewrite against the parquet-snapshot
 backend; on Iceberg it becomes MERGE INTO (merge-on-read) with
 identical semantics.
@@ -42,6 +43,7 @@ from go_scrapper_spark.functions.urltools import canonicalize_udf
 from go_scrapper_spark.operators.dedupe import local_checkpoint_no_stats
 from go_scrapper_spark.operators.politeness import apply_robots
 from go_scrapper_spark.operators.wave import host_budget, select_wave
+from go_scrapper_spark.schemas import INC_HASHES_SCHEMA, INC_STATE_SCHEMA
 from go_scrapper_spark.sources.storage import SnapshotStore
 
 RUN_TS = 1700000000  # single run-level scrape timestamp (P11 determinism)
@@ -54,7 +56,6 @@ class CrawlConfig:
     max_attempts: int = 5  # 5 total fetch attempts per url (main.go:1079-1099)
     window_ms: int = 30_000  # superstep politeness window (A5)
     default_k: int = 10  # colly Parallelism fallback (collyfunc.go:179)
-    n_buckets: int = 64  # host/url hash buckets (skew + storage partitioning)
     max_supersteps: int = 1000
     # transient-failure injection: a zero-arg callable returning a
     # JVM-native Column (url column -> int) of leading attempts that
@@ -236,9 +237,6 @@ class CrawlEngine:
                 "url",
                 F.xxhash64("url").alias("url_hash"),
                 _host_col(F.col("url")).alias("host"),
-                F.pmod(F.xxhash64(_host_col(F.col("url"))), F.lit(self.cfg.n_buckets))
-                .cast("int")
-                .alias("host_bucket"),
                 F.lit(0).alias("depth"),
                 "seq",
                 "fpo",
@@ -262,10 +260,7 @@ class CrawlEngine:
                  "hit": False, "n_reviews": 0}
             for tk in inc_hashes
         }
-        seen = self._frontier_cache.select(
-            "url_hash", self._url_bucket(), F.lit(0).cast("long").alias("wave_id"),
-        )
-        self._submit_commit(0, {**self._carried_tables(), "seen": seen})
+        self._submit_commit(0, self._carried_tables())
         seeds_df.unpersist()
 
     # ------------------------------------------------------- carried state
@@ -318,12 +313,7 @@ class CrawlEngine:
         if self.cfg.cookies:
             tables["cookies"] = self._cookie_df
         if self._inc_hashes:
-            from go_scrapper_spark.schemas import INC_HASHES_SCHEMA, INC_STATE_SCHEMA
-
-            tables["inc_hashes"] = self.spark.createDataFrame(
-                [(tk, h) for tk, hs in self._inc_hashes.items() for h in hs],
-                INC_HASHES_SCHEMA,
-            )
+            tables["inc_hashes"] = self._inc_hashes_df()
             tables["inc_state"] = self.spark.createDataFrame(
                 [(tk, st["unlocked"], st["done"], st["started"], st["hit"],
                   st["n_reviews"])
@@ -331,6 +321,14 @@ class CrawlEngine:
                 INC_STATE_SCHEMA,
             )
         return tables
+
+    def _inc_hashes_df(self) -> DataFrame:
+        """(task_key, review_hash): every incremental task's
+        last_review_hashes, one row each."""
+        return self.spark.createDataFrame(
+            [(tk, h) for tk, hs in self._inc_hashes.items() for h in hs],
+            INC_HASHES_SCHEMA,
+        )
 
     def _supersede(self, old: DataFrame, new: DataFrame) -> DataFrame:
         """Eager checkpoint of ``new``, the replacement of the live
@@ -340,10 +338,6 @@ class CrawlEngine:
         commit's free step."""
         self._superseded.append(old)
         return local_checkpoint_no_stats(new)
-
-    def _url_bucket(self):
-        """The bucket of a row's url_hash in the ``seen`` table."""
-        return F.pmod("url_hash", F.lit(self.cfg.n_buckets)).cast("int").alias("bucket")
 
     # --------------------------------------------------------------- superstep
 
@@ -430,13 +424,6 @@ class CrawlEngine:
                 "_n_attempts",
                 F.when(F.col("_succ"), F.col("_fa") + 1 - F.col("attempt"))
                 .otherwise(max_a - F.col("attempt")),
-            )
-            .withColumn(
-                "status",
-                F.when(F.col("_succ"), F.lit(200)).otherwise(
-                    F.when(F.col("html").isNotNull(), F.lit(503))
-                    .otherwise(F.lit(404))
-                ),
             )
             .persist()
         )
@@ -565,7 +552,7 @@ class CrawlEngine:
         frontier_next = (
             frontier.join(upd, "url", "left")
             .select(
-                "url", "url_hash", "host", "host_bucket", "depth", "seq", "fpo",
+                "url", "url_hash", "host", "depth", "seq", "fpo",
                 F.coalesce("_new_attempt", "attempt").alias("attempt"),
                 F.coalesce("_new_state", "state").alias("state"),
                 F.when(F.col("_new_state").isNotNull(), F.lit(wave_id).cast("long"))
@@ -574,10 +561,6 @@ class CrawlEngine:
                 "probe_window",
             )
             .unionByName(new_rows)
-        )
-
-        seen_delta = new_rows.select(
-            "url_hash", self._url_bucket(), F.lit(wave_id).cast("long").alias("wave_id"),
         )
 
         # The frontier checkpoint runs FIRST: the heavy branch of
@@ -626,7 +609,6 @@ class CrawlEngine:
             "extracted": reviews,
             "pagetext": pagetexts,
             "pagemeta": pagemeta,
-            "seen": seen_delta,
         }
         for name, df in deltas.items():
             self._pending_deltas.setdefault(name, []).append(df)
@@ -812,7 +794,6 @@ class CrawlEngine:
     def _new_frontier_rows(
         self, union: DataFrame, frontier: DataFrame, wave_id: int
     ) -> DataFrame:
-        cfg = self.cfg
         cand = (
             union.filter(F.col("kind") == "outlink")
             .select(
@@ -886,11 +867,7 @@ class CrawlEngine:
         return cand.select(
             "url",
             F.xxhash64("url").alias("url_hash"),
-            "host",
-            F.pmod(F.xxhash64("host"), F.lit(cfg.n_buckets))
-            .cast("int")
-            .alias("host_bucket"),
-            "depth", "seq", "fpo",
+            "host", "depth", "seq", "fpo",
             F.lit(0).alias("attempt"),
             F.lit("pending").alias("state"),
             F.lit(wave_id).cast("long").alias("wave_id"),
@@ -937,10 +914,7 @@ class CrawlEngine:
         next probe window. Two O(tasks)-row collects per wave, only in
         incremental runs."""
         str100 = SEED_SEQ_STRIDE * 100
-        hdf = self.spark.createDataFrame(
-            [(tk, h) for tk, hs in self._inc_hashes.items() for h in hs],
-            "task_key long, review_hash string",
-        ).withColumn("_hit", F.lit(1))
+        hdf = self._inc_hashes_df().withColumn("_hit", F.lit(1))
         rev = union.filter(F.col("kind") == "review").select(
             F.floor(F.col("arrival_idx") / str100).cast("long").alias("task_key"),
             "review_hash",

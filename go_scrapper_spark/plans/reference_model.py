@@ -7,7 +7,8 @@ U2/J3). This model implements those semantics directly — single
 process, explicit loops — and serves as the oracle for the Spark
 engine: given the same synthetic web, seeds, and politeness budget,
 the engine must reproduce the model's exact fetch log
-(wave, host, url, attempt, status) and final frontier/seen state.
+(wave, host, url, attempt, status) and final frontier, whose keys are
+the seen set.
 
 The model reuses the *same* pure functions as the engine's executors
 (extract_page, canonicalize_url, fail_attempts_for), so any divergence
@@ -250,7 +251,6 @@ class ModelCrawl:
         return {
             "fetch_log": self.fetch_log,
             "frontier": self.frontier,
-            "seen": set(self.frontier),
             "reviews": self.reviews,
             "inc_state": self.inc_state,
         }

@@ -1,27 +1,15 @@
-"""All StructType contracts of the engine (SURVEY.md §1, FIXTURES.md).
+"""The StructType contracts of the engine's inputs and of its
+driver-built state tables (SURVEY.md §1, FIXTURES.md).
 
-Fixed schemas everywhere — the reference's one dynamic escape hatch
-(the hovercard JSON island probed as map[string]interface{},
-reference main.go:366-373) is parsed inside a vectorized extractor and
-emits a fixed schema too.
+Only schemas that code imports live here. Every other table's shape
+(frontier, fetch log, extracted reviews, pagetext, pagemeta, metrics,
+the extractor's tagged union) is stated once, by the code that writes
+it: plans/crawl.py and functions/extract.py.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
-
-# ---------------------------------------------------------------------------
-# pages — the synthetic web (shape fixed by BASELINE.json input_hint)
-# ---------------------------------------------------------------------------
-PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("html", T.BinaryType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-    ]
-)
 
 # ---------------------------------------------------------------------------
 # seeds — crawl tasks (mirror of the Spider struct, reference main.go:31-52)
@@ -66,30 +54,6 @@ ROBOTS_SCHEMA = T.StructType(
     ]
 )
 
-# ---------------------------------------------------------------------------
-# frontier — scheduler state, checkpointed every superstep
-# ---------------------------------------------------------------------------
-FRONTIER_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("url_hash", T.LongType(), False),
-        T.StructField("host", T.StringType(), False),
-        T.StructField("host_bucket", T.IntegerType(), False),
-        T.StructField("depth", T.IntegerType(), False),
-        T.StructField("seq", T.LongType(), False),
-        T.StructField("fpo", T.IntegerType(), False),  # FirstPageOnly, inherited
-        T.StructField("attempt", T.IntegerType(), False),
-        T.StructField("state", T.StringType(), False),  # pending/fetched/failed/excluded
-        T.StructField("wave_id", T.LongType(), False),
-        # G3 fetch-avoidance (main.go:563-654): pagination rows of
-        # incremental tasks carry their 50-wide probe window
-        # (floor(start/50)); the non-rec bootstrap page carries the
-        # sentinel -1 (always admissible, blocks the window boundary
-        # like the reference's wg.Wait barrier). NULL = ungated.
-        T.StructField("probe_window", T.IntegerType(), True),
-    ]
-)
-
 # per-task incremental-crawl scheduler state, committed with each snapshot
 INC_STATE_SCHEMA = T.StructType(
     [
@@ -102,149 +66,11 @@ INC_STATE_SCHEMA = T.StructType(
     ]
 )
 
+# per-task last_review_hashes, committed with each snapshot of an
+# incremental run
 INC_HASHES_SCHEMA = T.StructType(
     [
         T.StructField("task_key", T.LongType(), False),
         T.StructField("review_hash", T.StringType(), False),
-    ]
-)
-
-SEEN_SCHEMA = T.StructType(
-    [
-        T.StructField("url_hash", T.LongType(), False),
-        T.StructField("bucket", T.IntegerType(), False),
-        T.StructField("wave_id", T.LongType(), False),
-    ]
-)
-
-FETCH_LOG_SCHEMA = T.StructType(
-    [
-        T.StructField("wave_id", T.LongType(), False),
-        T.StructField("host", T.StringType(), False),
-        T.StructField("url", T.StringType(), False),
-        T.StructField("depth", T.IntegerType(), False),
-        T.StructField("seq", T.LongType(), False),
-        T.StructField("attempt", T.IntegerType(), False),
-        T.StructField("status", T.IntegerType(), False),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# extracted — output records (mirror of ReviewFomate, main.go:110-124)
-# ---------------------------------------------------------------------------
-OWNER_REPLY_TYPE = T.StructType(
-    [
-        T.StructField("author_name", T.StringType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("posted_at", T.StringType(), True),
-    ]
-)
-
-EXTRACTED_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("parent_id", T.StringType(), True),
-        T.StructField("review_id", T.StringType(), True),
-        T.StructField("author_id", T.StringType(), True),
-        T.StructField("author_name", T.StringType(), True),  # b64 (main.go:1064-1077)
-        T.StructField("text", T.StringType(), True),  # unescaped then b64
-        T.StructField("rating", T.IntegerType(), True),
-        T.StructField("source_date", T.StringType(), True),  # M/d/yyyy display form
-        T.StructField("posted_at", T.LongType(), True),  # unix seconds
-        T.StructField("scraped_at", T.LongType(), True),
-        T.StructField("not_recommended", T.BooleanType(), True),
-        T.StructField("photos", T.ArrayType(T.StringType()), True),
-        T.StructField("responses", T.ArrayType(OWNER_REPLY_TYPE), True),
-        T.StructField("review_hash", T.StringType(), True),  # md5, main.go:1009-1036
-        T.StructField("arrival_idx", T.LongType(), True),  # deterministic tiebreak (W1)
-    ]
-)
-
-# Tagged-union output of the page extractor (one mapInPandas pass per page
-# yields review rows AND outlink rows AND page-meta rows — html is read once).
-EXTRACT_UNION_SCHEMA = T.StructType(
-    [
-        T.StructField("kind", T.StringType(), False),  # review / outlink / pagemeta
-        T.StructField("url", T.StringType(), False),  # source page url
-        # outlink fields
-        T.StructField("out_url", T.StringType(), True),
-        T.StructField("out_depth", T.IntegerType(), True),
-        T.StructField("out_seq", T.LongType(), True),
-        # pagemeta fields
-        T.StructField("business_id", T.StringType(), True),
-        T.StructField("review_count", T.IntegerType(), True),
-        T.StructField("non_rec_count", T.IntegerType(), True),
-        T.StructField("agg_score", T.DoubleType(), True),
-        # review fields (pre-b64; finishing pass applies hash+b64)
-        T.StructField("parent_id", T.StringType(), True),
-        T.StructField("review_id", T.StringType(), True),
-        T.StructField("author_id", T.StringType(), True),
-        T.StructField("author_name", T.StringType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("rating", T.IntegerType(), True),
-        T.StructField("source_date", T.StringType(), True),
-        T.StructField("not_recommended", T.BooleanType(), True),
-        T.StructField("photos", T.ArrayType(T.StringType()), True),
-        T.StructField("responses", T.ArrayType(OWNER_REPLY_TYPE), True),
-        T.StructField("review_hash", T.StringType(), True),
-        T.StructField("arrival_idx", T.LongType(), True),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# metrics — one row per (wave, metric) (sink S7; correct counters, unlike the
-# reference's by-value-broken request_count/response_bytes, collyfunc.go:90-111)
-# ---------------------------------------------------------------------------
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("wave_id", T.LongType(), False),
-        T.StructField("metric", T.StringType(), False),
-        T.StructField("value", T.LongType(), False),
-    ]
-)
-
-# Nested schema of the review_feed JSON endpoint (Reviews struct,
-# reference main.go:54-101) — used with from_json / the vectorized decoder.
-_OWNER_REPLY_JSON = T.StructType(
-    [
-        T.StructField(
-            "owner", T.StructType([T.StructField("displayName", T.StringType())])
-        ),
-        T.StructField("comment", T.StringType()),
-        T.StructField("localizedDate", T.StringType()),
-    ]
-)
-
-_REVIEW_CORE_FIELDS = [
-    T.StructField("comment", T.StructType([T.StructField("text", T.StringType())])),
-    T.StructField("rating", T.IntegerType()),
-    T.StructField(
-        "photos", T.ArrayType(T.StructType([T.StructField("src", T.StringType())]))
-    ),
-    T.StructField("userId", T.StringType()),
-    T.StructField("id", T.StringType()),
-    T.StructField("localizedDate", T.StringType()),
-    T.StructField(
-        "user", T.StructType([T.StructField("markupDisplayName", T.StringType())])
-    ),
-    T.StructField("businessOwnerReplies", T.ArrayType(_OWNER_REPLY_JSON)),
-]
-
-REVIEWS_JSON_SCHEMA = T.StructType(
-    [
-        T.StructField(
-            "reviews",
-            T.ArrayType(
-                T.StructType(
-                    _REVIEW_CORE_FIELDS
-                    + [
-                        T.StructField(
-                            "previousReviews",
-                            T.ArrayType(T.StructType(_REVIEW_CORE_FIELDS)),
-                        )
-                    ]
-                )
-            ),
-        )
     ]
 )

@@ -11,12 +11,19 @@ Layout::
 
     base/
       snap-00000/
-        frontier/ ...parquet        # full frontier state after wave 0
-        extracted/ ...parquet       # delta: rows produced by wave 0
-        fetch_log/ ...parquet
-        seen/ ...parquet            # delta: url_hashes first enqueued in wave 0
-        metrics/ ...parquet
+        frontier/ ...parquet        # the seeded frontier (full state)
         _MANIFEST.json              # written LAST -> commit point
+      snap-00001/
+        frontier/ ...parquet        # full frontier state after wave 1
+        fetch_log/ ...parquet       # delta: attempts logged by wave 1
+        extracted/ ...parquet       # delta: reviews produced by wave 1
+        pagetext/ ...parquet
+        pagemeta/ ...parquet
+        metrics/ ...parquet
+        _MANIFEST.json
+
+The frontier holds every URL ever admitted, so it is also the exact
+URL-seen set each wave's candidates anti-join.
 
 A crashed superstep leaves parquet but no manifest; resume re-runs the
 wave from the last *committed* frontier, and since every output row is
@@ -36,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 # delta tables: one slice per snapshot, readers union across snapshots
 # (everything else in a snapshot — frontier, cookies, inc_* — is
 # full state, latest snapshot wins: read_latest)
-APPEND_TABLES = ("extracted", "fetch_log", "pagetext", "pagemeta", "seen", "metrics")
+APPEND_TABLES = ("extracted", "fetch_log", "pagetext", "pagemeta", "metrics")
 
 
 class SnapshotStore:

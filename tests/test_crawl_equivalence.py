@@ -74,14 +74,21 @@ def test_final_frontier_state_matches_model(run):
     assert ef == mf
 
 
-def test_seen_table_matches_frontier_keys(run):
+def test_snapshots_commit_only_read_state(run):
+    """Snapshot 0 holds the seeded frontier alone; every wave snapshot
+    holds the frontier and the wave's delta tables, nothing else. The
+    frontier is the only URL-seen set, so no separate seen table or
+    bucket column is written."""
     _eng, store, _total, _m = run
-    seen = {r["url_hash"] for r in store.read_appended("seen").collect()}
-    frontier_hashes = {
-        r["url_hash"]
-        for r in store.read_snapshot_table(store.latest_wave(), "frontier").collect()
-    }
-    assert seen == frontier_hashes
+    waves = store.committed_waves()
+    assert waves[0] == 0 and len(waves) > 1
+    for wave in waves:
+        with open(store._manifest_path(wave)) as f:
+            tables = set(json.load(f)["tables"])
+        assert tables == ({"frontier"} if wave == 0 else {
+            "frontier", "fetch_log", "extracted", "pagetext", "pagemeta", "metrics",
+        }), wave
+        assert "host_bucket" not in store.read_snapshot_table(wave, "frontier").columns
 
 
 def test_no_url_fetched_twice_at_same_attempt(run):
@@ -395,7 +402,10 @@ def _check_metrics_table(store, total):
         .collect()
     }
     reviews = dict(store.read_appended("extracted").groupBy("wave_id").count().collect())
-    seen = dict(store.read_appended("seen").groupBy("wave_id").count().collect())
+    # discovered: the wave's growth in committed frontier rows (every
+    # wave commits and no maintenance step runs in these crawls)
+    sizes = {w: store.read_snapshot_table(w, "frontier").count()
+             for w in store.committed_waves()}
     # outlinks: the outlink rows extract_page returns for each page a
     # wave fetched, from the synthetic web's bodies and the fpo flag of
     # the committed frontier
@@ -414,7 +424,7 @@ def _check_metrics_table(store, total):
         assert (m["attempted"], m["fetched"], m["bytes"]) == log.get(wave, (0, 0, 0)), wave
         assert m["reviews"] == reviews.get(wave, 0), wave
         assert m["outlinks"] == outlinks.get(wave, 0), wave
-        assert m["discovered"] == seen.get(wave, 0), wave
+        assert m["discovered"] == sizes[wave] - sizes[wave - 1], wave
     for k in ("attempted", "fetched", "bytes", "reviews"):
         assert total[k] == sum(m[k] for m in got.values()), k
     assert total["fetched"] > 0 and total["reviews"] > 0

@@ -1,10 +1,11 @@
 """Incremental truncation semantics (F4/W2, main.go:950-960): the
 list is cut at the FIRST seen hash in output order — seen row and
-everything after dropped; no seen hash → nothing dropped."""
+everything after dropped; no seen hash → nothing dropped. Every
+fixture row belongs to task 0 (arrival_idx < 100 · stride)."""
 
 import pytest
 
-from go_scrapper_spark.operators.incremental import truncate_at_seen_hash
+from go_scrapper_spark.operators.incremental import truncate_per_task
 
 
 @pytest.fixture(scope="module")
@@ -25,20 +26,20 @@ def extracted(spark):
 def test_cut_at_first_seen(extracted):
     got = sorted(
         r["review_hash"]
-        for r in truncate_at_seen_hash(extracted, ["h-seen-a", "h-seen-b"]).collect()
+        for r in truncate_per_task(extracted, {0: ("h-seen-a", "h-seen-b")}).collect()
     )
     assert got == ["h-new-1", "h-new-2"]
 
 
 def test_no_seen_hash_keeps_all(extracted):
-    assert truncate_at_seen_hash(extracted, ["nope"]).count() == 5
+    assert truncate_per_task(extracted, {0: ("nope",)}).count() == 5
 
 
 def test_empty_hash_list_is_noop(extracted):
-    assert truncate_at_seen_hash(extracted, []).count() == 5
+    assert truncate_per_task(extracted, {0: ()}).count() == 5
 
 
 def test_seen_only_later_in_order(extracted):
     # only the last row's hash is seen → cut keeps the first four
-    got = truncate_at_seen_hash(extracted, ["h-seen-b"]).count()
+    got = truncate_per_task(extracted, {0: ("h-seen-b",)}).count()
     assert got == 4
