@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from go_scrapper_spark.session import local_table
+
 
 def order_cols():
     """The engine's deterministic W1 output order (date desc, arrival)."""
@@ -43,8 +45,8 @@ def truncate_per_task(
     broadcast join; the cut is one window per task partition."""
     if not inc_hashes:
         return extracted
-    spark = extracted.sparkSession
-    hdf = spark.createDataFrame(
+    hdf = local_table(
+        extracted.sparkSession,
         [(tk, h) for tk, hs in inc_hashes.items() for h in hs],
         "_tk long, review_hash string",
     ).withColumn("_hit_flag", F.lit(1))

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from go_scrapper_spark.operators.dedupe import (free_local_checkpoint,
                                                 local_checkpoint_no_stats)
+from go_scrapper_spark.session import local_table
 
 
 def pagerank_lite(vertices: DataFrame, edges: DataFrame, iters: int = 3,
@@ -103,4 +104,4 @@ def pagerank_lite(vertices: DataFrame, edges: DataFrame, iters: int = 3,
         vertices.unpersist()
         for prev in ckpts:
             free_local_checkpoint(prev)
-    return ranks.sparkSession.createDataFrame(rows, ranks.schema)
+    return local_table(ranks.sparkSession, rows, ranks.schema)

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from go_scrapper_spark.session import local_table
+
 
 def _hash_bucket(id_col: str, buckets: int = 1000) -> F.Column:
     """Deterministic bucket in [0, buckets): leading 32 bits of
@@ -45,8 +47,8 @@ def stratified_sample(docs: DataFrame, rates: dict[str, int],
     ``rates``: stratum value → permille kept (0..1000). Strata absent
     from the table get ``default_permille``. Adds the bucket column so
     downstream audits can verify membership without recomputing."""
-    spark = docs.sparkSession
-    rates_df = spark.createDataFrame(
+    rates_df = local_table(
+        docs.sparkSession,
         [(k, int(v)) for k, v in rates.items()],
         "stratum string, keep_permille int",
     )

@@ -44,6 +44,7 @@ from go_scrapper_spark.operators.dedupe import local_checkpoint_no_stats
 from go_scrapper_spark.operators.politeness import apply_robots
 from go_scrapper_spark.operators.wave import host_budget, select_wave
 from go_scrapper_spark.schemas import INC_HASHES_SCHEMA, INC_STATE_SCHEMA
+from go_scrapper_spark.session import local_table
 from go_scrapper_spark.sources.storage import SnapshotStore
 
 RUN_TS = 1700000000  # single run-level scrape timestamp (P11 determinism)
@@ -291,7 +292,7 @@ class CrawlEngine:
         if cfg.cookies:
             jar = read("cookies")
             if jar is None:
-                jar = self.spark.createDataFrame([], "host string, cookie string")
+                jar = local_table(self.spark, [], "host string, cookie string")
             self._cookie_df = local_checkpoint_no_stats(jar)
         self._inc_hashes, self._inc_state = {}, {}
         hashes = read("inc_hashes")
@@ -314,7 +315,8 @@ class CrawlEngine:
             tables["cookies"] = self._cookie_df
         if self._inc_hashes:
             tables["inc_hashes"] = self._inc_hashes_df()
-            tables["inc_state"] = self.spark.createDataFrame(
+            tables["inc_state"] = local_table(
+                self.spark,
                 [(tk, st["unlocked"], st["done"], st["started"], st["hit"],
                   st["n_reviews"])
                  for tk, st in self._inc_state.items()],
@@ -325,7 +327,8 @@ class CrawlEngine:
     def _inc_hashes_df(self) -> DataFrame:
         """(task_key, review_hash): every incremental task's
         last_review_hashes, one row each."""
-        return self.spark.createDataFrame(
+        return local_table(
+            self.spark,
             [(tk, h) for tk, hs in self._inc_hashes.items() for h in hs],
             INC_HASHES_SCHEMA,
         )
@@ -365,7 +368,8 @@ class CrawlEngine:
             # row of an incremental task is schedulable only while its
             # window is unlocked and the task hasn't matched a seen
             # hash. The state table is O(tasks) → broadcast join.
-            sdf = self.spark.createDataFrame(
+            sdf = local_table(
+                self.spark,
                 [(tk, st["unlocked"], st["done"])
                  for tk, st in self._inc_state.items()],
                 "task_key long, unlocked int, done boolean",
@@ -630,8 +634,9 @@ class CrawlEngine:
                 name: reduce(DataFrame.unionByName, dfs)
                 for name, dfs in self._pending_deltas.items()
             }
-            tables["metrics"] = self.spark.createDataFrame(
-                self._pending_metrics, "wave_id long, metric string, value long"
+            tables["metrics"] = local_table(
+                self.spark, self._pending_metrics,
+                "wave_id long, metric string, value long",
             )
             self._submit_commit(wave_id, {**tables, **self._carried_tables()})
             _phases["commit_wait"] = self._last_commit_wait

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _DRIVER_MEM_CAP_MB = 48 * 1024
 
@@ -103,3 +103,31 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_table(spark: SparkSession, rows, schema) -> DataFrame:
+    """Driver-held ``rows`` as a table: tuples in field order, or dicts
+    by field name (a missing key is NULL), against ``schema`` (a
+    StructType or a DDL string).
+
+    The rows ship to the JVM as one ``pyarrow.Table`` built against the
+    Spark schema, so the frame is a ``LocalRelation``: no Python worker
+    ever reads it. A Python list handed to ``spark.createDataFrame``
+    instead becomes parallelize -> ``PythonRDD``, which pickles the rows
+    row by row and re-runs a Python worker on every evaluation of the
+    plan, on a second PySpark daemon beside the one the Arrow UDFs use;
+    a pandas frame takes the Arrow route only while its conversion
+    succeeds and silently falls back to the pickled one otherwise. A
+    NULL in a non-nullable field raises."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    names = schema.fieldNames()
+    table = pa.Table.from_pylist(
+        [r if isinstance(r, dict) else dict(zip(names, r, strict=True)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema)

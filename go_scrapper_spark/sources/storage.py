@@ -41,9 +41,10 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 
 # delta tables: one slice per snapshot, readers union across snapshots
-# (everything else in a snapshot — frontier, cookies, inc_* — is
-# full state, latest snapshot wins: read_latest)
 APPEND_TABLES = ("extracted", "fetch_log", "pagetext", "pagemeta", "metrics")
+# full-state tables a resume loads (CrawlEngine._fill_state): the
+# latest snapshot wins, read_latest
+STATE_TABLES = ("frontier", "cookies", "inc_hashes", "inc_state")
 
 
 class SnapshotStore:
@@ -159,13 +160,15 @@ class SnapshotStore:
 
         The compacted snapshot keeps the SAME wave id, so a resumed
         run numbers its next superstep identically; append tables are
-        unioned across snapshots and coalesced, full-state tables copy
-        from the latest snapshot. Crash-safe by construction: the
-        destination manifest is written last, so an interrupted
-        compaction leaves an empty (ignorable) destination and the
-        source store untouched. The caller switches directories after
-        success — the pointer swap is deployment's atomic step, as
-        with an Iceberg catalog update."""
+        unioned across snapshots and coalesced, and the full-state
+        tables a resume loads copy from the latest snapshot when its
+        manifest lists them (any other table there, such as the
+        ``seen`` slice older stores carry, is dropped). Crash-safe by
+        construction: the destination manifest is written last, so an
+        interrupted compaction leaves an empty (ignorable) destination
+        and the source store untouched. The caller switches directories
+        after success — the pointer swap is deployment's atomic step,
+        as with an Iceberg catalog update."""
         wave = self.latest_wave()
         assert wave is not None, "nothing to compact"
         dest = SnapshotStore(self.spark, dest_dir)
@@ -174,14 +177,10 @@ class SnapshotStore:
             df = self.read_appended(name)
             if df is not None:
                 tables[name] = df.coalesce(target_files)
-        latest_dir = self._snap_dir(wave)
-        for name in sorted(os.listdir(latest_dir)):
-            path = os.path.join(latest_dir, name)
-            if name.startswith("_") or not os.path.isdir(path):
-                continue
-            if name in APPEND_TABLES:
-                continue
-            tables[name] = self.spark.read.parquet(path)
+        for name in STATE_TABLES:
+            df = self.read_latest(name)
+            if df is not None:
+                tables[name] = df
         dest.commit(wave, tables)
         return dest
 

@@ -555,23 +555,16 @@ def seed_rows(cfg: WebConfig, last_hashes: dict[int, list[str]] | None = None) -
 
 def robots_df(spark, cfg: WebConfig):
     from go_scrapper_spark.schemas import ROBOTS_SCHEMA
+    from go_scrapper_spark.session import local_table
 
-    return spark.createDataFrame(robots_rows(cfg), schema=ROBOTS_SCHEMA)
+    return local_table(spark, robots_rows(cfg), ROBOTS_SCHEMA)
 
 
 def seeds_df(spark, cfg: WebConfig, last_hashes: dict[int, list[str]] | None = None):
     from go_scrapper_spark.schemas import SEEDS_SCHEMA
+    from go_scrapper_spark.session import local_table
 
-    # Arrow path: a list-of-Rows createDataFrame pickles row-by-row on
-    # every materialization of the plan (~5 s at 48k tasks, driver-
-    # serial — pure Amdahl in the crawl's seed phase); a pandas frame
-    # ships as Arrow batches (~0.5 s). Column order must match the
-    # schema — pandas input binds by position.
-    import pandas as pd
-
-    rows = seed_rows(cfg, last_hashes)
-    pdf = pd.DataFrame(rows, columns=[f.name for f in SEEDS_SCHEMA.fields])
-    return spark.createDataFrame(pdf, schema=SEEDS_SCHEMA)
+    return local_table(spark, seed_rows(cfg, last_hashes), SEEDS_SCHEMA)
 
 
 # --- Spark-side generator ------------------------------------------------------

@@ -95,7 +95,7 @@ def main() -> None:
     from go_scrapper_spark.plans.crawl import CrawlConfig, CrawlEngine
     from go_scrapper_spark.plans.search import resolve_profile_keys
     from go_scrapper_spark.schemas import SEEDS_SCHEMA
-    from go_scrapper_spark.session import get_spark
+    from go_scrapper_spark.session import get_spark, local_table
     from go_scrapper_spark.sources import synthetic_web as sw
     from go_scrapper_spark.sources.sinks import meta_json, write_jsonl
     from go_scrapper_spark.sources.storage import SnapshotStore
@@ -135,9 +135,7 @@ def main() -> None:
         )
     else:
         robots = sw.robots_df(spark, cfg)
-    seeds = spark.createDataFrame(
-        parse_tasks(args.additional_args), schema=SEEDS_SCHEMA
-    )
+    seeds = local_table(spark, parse_tasks(args.additional_args), SEEDS_SCHEMA)
     seeds = resolve_profile_keys(seeds, pages)
 
     store = SnapshotStore(spark, args.store or (args.output + "-store"))

@@ -221,6 +221,32 @@ def test_scale_mode_combined_equivalence(spark, runs):
         shutil.rmtree(base, ignore_errors=True)
 
 
+def test_snapshot_tables_run_no_python_rdd(spark, tmp_path):
+    """Every table a commit writes (the frontier, the wave deltas, the
+    metrics, the cookie jar and the incremental state) runs without a
+    PythonRDD: the driver-built ones are Arrow local relations, so no
+    commit starts a Python worker to unpickle them."""
+    store = SnapshotStore(spark, str(tmp_path))
+    lineages = {}
+    commit = store.commit
+
+    def checked_commit(wave_id, tables):
+        for name, df in tables.items():
+            lineages[wave_id, name] = df._jdf.queryExecution().toRdd().toDebugString()
+        return commit(wave_id, tables)
+
+    store.commit = checked_commit
+    pages = sw.generate_pages_df(spark, CFG, n_partitions=4)
+    CrawlEngine(
+        spark, pages, sw.robots_df(spark, CFG), store,
+        CrawlConfig(fail_attempts_col=lambda: sw.fail_attempts_col(CFG),
+                    cookies=True, max_supersteps=2),
+    ).run(_seeds(spark, LAST_HASHES))
+    assert {name for _w, name in lineages} >= {
+        "frontier", "fetch_log", "metrics", "cookies", "inc_hashes", "inc_state"}
+    assert sorted(k for k, s in lineages.items() if "PythonRDD" in s) == []
+
+
 def test_cli_incremental_truncates_jsonl(tmp_path):
     """CLI smoke (S1/S2 + G3 wiring in jobs/crawl.py): a task with a
     seeded last_review_hash produces strictly fewer JSONL lines than

@@ -6,6 +6,7 @@ fixture row belongs to task 0 (arrival_idx < 100 · stride)."""
 import pytest
 
 from go_scrapper_spark.operators.incremental import truncate_per_task
+from go_scrapper_spark.session import local_table
 
 
 @pytest.fixture(scope="module")
@@ -18,17 +19,17 @@ def extracted(spark):
         ("u1", "h-old-1", 200, 1, 4),
         ("u1", "h-seen-b", 100, 2, 5),
     ]
-    return spark.createDataFrame(
-        rows, "url string, review_hash string, posted_at long, wave_id long, arrival_idx long"
+    return local_table(
+        spark, rows,
+        "url string, review_hash string, posted_at long, wave_id long, arrival_idx long",
     )
 
 
 def test_cut_at_first_seen(extracted):
-    got = sorted(
-        r["review_hash"]
-        for r in truncate_per_task(extracted, {0: ("h-seen-a", "h-seen-b")}).collect()
-    )
-    assert got == ["h-new-1", "h-new-2"]
+    cut = truncate_per_task(extracted, {0: ("h-seen-a", "h-seen-b")})
+    assert sorted(r["review_hash"] for r in cut.collect()) == ["h-new-1", "h-new-2"]
+    # the hash table is a local relation: the cut runs no Python task
+    assert "PythonRDD" not in cut._jdf.queryExecution().toRdd().toDebugString()
 
 
 def test_no_seen_hash_keeps_all(extracted):

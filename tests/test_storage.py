@@ -89,3 +89,23 @@ def test_read_latest_follows_latest_manifest(spark, store):
     os.makedirs(os.path.join(store._snap_dir(3), "t1"), exist_ok=True)
     assert store.read_latest("t0").count() == 5
     assert store.read_latest("t1") is None
+
+
+def test_compact_copies_only_the_state_a_resume_loads(spark, store, tmp_path):
+    """compact unions the append tables and copies the full-state tables
+    a resume loads from the latest snapshot; any other table its
+    manifest lists, such as the seen slice of a store written before
+    the frontier became the seen set, is left behind."""
+    def v(n):
+        return spark.range(n).withColumnRenamed("id", "v")
+
+    store.commit(1, {"frontier": v(4), "seen": v(4), "fetch_log": v(2)})
+    store.commit(2, {"frontier": v(6), "seen": v(2), "fetch_log": v(3),
+                     "cookies": v(1)})
+    dest = store.compact(str(tmp_path / "compacted"))
+    assert dest.committed_waves() == [2]
+    with open(dest._manifest_path(2)) as f:
+        assert json.load(f)["tables"] == ["cookies", "fetch_log", "frontier"]
+    assert not os.path.exists(os.path.join(dest._snap_dir(2), "seen"))
+    assert dest.read_latest("frontier").count() == 6
+    assert dest.read_appended("fetch_log").count() == 5

@@ -314,7 +314,8 @@ def test_pagerank_lite_hand_computed(spark):
 def test_pagerank_lite_releases_its_caches(spark):
     """pagerank_lite frees its persisted edge and vertex frames and its
     round checkpoint once the ranks are materialized: repeated calls
-    leave no persisted RDD behind."""
+    leave no persisted RDD behind, and the returned ranks are a local
+    table that no downstream read runs through Python."""
     from go_scrapper_spark.operators.linkrank import pagerank_lite
 
     jsc = spark.sparkContext._jsc
@@ -327,6 +328,7 @@ def test_pagerank_lite_releases_its_caches(spark):
         # iter3: B = C = 150k + (850 * (638_750 div 2)) div 1000
         assert {r["v"]: r["rank"] for r in ranks.collect()} == {
             1: 638_750, 2: 421_468, 3: 421_468}
+        assert "PythonRDD" not in ranks._jdf.queryExecution().toRdd().toDebugString()
     assert set(jsc.getPersistentRDDs().keySet()) - before == set()
 
 
